@@ -1265,6 +1265,11 @@ def _se_strip_dispatch(spark, n_docs: int = 100_000,
                                  and arm_past_cap == "antijoin")}
 
 
+# labels of the cells that failed in this run; the headline reports the
+# count as ``cells_failed``, so an rc-0 record still says a cell crashed
+_CELL_FAILURES: list[str] = []
+
+
 def _cell(label: str, fn, *args, **kw):
     """Failure-isolated bench cell (VERDICT r10 items 2/3): one crashing
     cell records ``{"error": ..., "trace_head": ...}`` instead of
@@ -1278,6 +1283,7 @@ def _cell(label: str, fn, *args, **kw):
             raise
         import traceback
         tb = traceback.format_exc()
+        _CELL_FAILURES.append(label)
         sys.stderr.write(f"bench cell {label!r} failed:\n{tb}\n")
         return {"error": tb.strip().splitlines()[-1][:300],
                 "trace_head": tb[:1500]}
@@ -1548,6 +1554,7 @@ def main() -> None:
     from hta_spark.session import get_spark
     import __spark_entry__ as entry_mod
 
+    _CELL_FAILURES.clear()
     spark = get_spark(app_name="hta_spark_bench", extra_conf={
         # keep stdout clean for the one-line JSON contract
         "spark.ui.showConsoleProgress": "false"})
@@ -1666,6 +1673,7 @@ def main() -> None:
             "value_normalized": _normalized(total, cores_now),
             "cold_sec_normalized": _normalized(cold_total, cores_now),
             "sf": _sf_label(SF_DIR),
+            "cells_failed": len(_CELL_FAILURES),
         }
 
     def write_detail(detail: dict) -> None:

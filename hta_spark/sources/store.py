@@ -42,10 +42,15 @@ from ..operators.retrieve import (retrieve_flex, retrieve_min_samples,
 from ..operators.rollup import build_levels
 from ..operators.scopes import (RAW_DEFAULT, ROW_DEFAULT, IntervalScope)
 from ..operators.stats import count_scoped
+from ..schemas import AGG_SCHEMA, RAW_SCHEMA
 
 __all__ = ["HtaStore", "Metric", "resolve_table_path", "publish_version",
            "publish_partitions", "read_partition_manifest", "read_level_table",
-           "list_versions", "resolve_table_version", "PublishLockError"]
+           "read_raw_table", "as_raw", "list_versions",
+           "resolve_table_version", "PublishLockError"]
+
+RAW_COLUMNS = [f.name for f in RAW_SCHEMA.fields]
+LEVEL_COLUMNS = [f.name for f in AGG_SCHEMA.fields]
 
 
 def resolve_table_path(path: str) -> str:
@@ -419,18 +424,13 @@ def _adopt_into_partition_manifest(spark: SparkSession, path: str,
     legacy = resolve_table_path(path)
     if not os.path.isdir(legacy):
         return
-    try:
-        df = spark.read.parquet(legacy)
-    except Exception:
-        # directory exists but holds no readable table (e.g. only the
-        # staging orphan of a crashed first publish) — nothing to adopt
-        return
+    # declared schema: a directory holding no data files (e.g. only the
+    # staging orphan of a crashed first publish) reads as an empty table
+    df = spark.read.schema(AGG_SCHEMA).parquet(legacy)
     if "tb" not in df.columns:
         df = df.withColumn("tb", F.call_function(
             "div", F.col("interval_start"), F.lit(top)))
-    df = df.withColumn("metric", F.col("metric").cast("string")).select(
-        "metric", "tb", "interval_start", "minimum", "maximum", "sum",
-        "count", "integral", "active_time")
+    df = df.select("metric", "tb", *LEVEL_COLUMNS[1:])
     # materialize before the legacy files are deleted out from under the
     # plan.  Deliberately NOT compat.pin (SCALE.md Connect table): the
     # persist fallback would be invalidated by the same-path publish's
@@ -461,34 +461,46 @@ def clear_partition_manifest(path: str) -> None:
             shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
 
 
+def read_raw_table(spark: SparkSession, path: str,
+                   version: int | None = None) -> DataFrame | None:
+    """Read a raw points table (plain or whole-table versioned; ``version``
+    time-travels, see :func:`resolve_table_version`) with the declared
+    ``RAW_SCHEMA``: no schema-inference job, and partition columns
+    (``metric``, ``day``) are discovered from the directory names.
+    Returns None when no table exists."""
+    if not table_exists(path):
+        return None
+    df = (spark.read.schema(RAW_SCHEMA)
+          .parquet(resolve_table_version(path, version)))
+    return df.select(*RAW_COLUMNS, *(["day"] if "day" in df.columns else []))
+
+
 def read_level_table(spark: SparkSession, path: str) -> DataFrame | None:
     """Read a level table in ANY of its layouts (partition-manifest,
-    whole-table-versioned, plain), normalized to the canonical aggregate
-    schema with ``metric`` as string.  Returns None when no table exists."""
+    whole-table-versioned, plain) with the declared ``AGG_SCHEMA``.  An
+    existing table with no data files reads as an empty frame; returns
+    None when no table exists."""
     doc = read_partition_manifest(path)
+    reader = spark.read.schema(AGG_SCHEMA)
     if doc is not None:
-        from ..schemas import AGG_SCHEMA
         dirs = [os.path.join(path, key, f"v={v}")
                 for key, v in doc["partitions"].items()]
         if not dirs:
             return spark.createDataFrame([], AGG_SCHEMA)
-        df = (spark.read.option("basePath", path).parquet(*dirs)
-              .drop("tb", "v"))
+        df = reader.option("basePath", path).parquet(*dirs)
+    elif table_exists(path):
+        df = reader.parquet(resolve_table_path(path))
     else:
-        if not table_exists(path):
-            return None
-        try:
-            df = spark.read.parquet(resolve_table_path(path))
-        except Exception:
-            # a level with no closed buckets yet has a directory but no
-            # data/schema files (empty write)
-            from ..schemas import AGG_SCHEMA
-            return spark.createDataFrame([], AGG_SCHEMA)
-        if "tb" in df.columns:
-            df = df.drop("tb")
-    return df.withColumn("metric", F.col("metric").cast("string")).select(
-        "metric", "interval_start", "minimum", "maximum", "sum", "count",
-        "integral", "active_time")
+        return None
+    return df.select(*LEVEL_COLUMNS)
+
+
+def as_raw(df: DataFrame) -> DataFrame:
+    """``df``'s raw columns cast to ``RAW_SCHEMA``'s declared types.  Every
+    raw write goes through here, so a declared-schema read never meets a
+    different physical type."""
+    return df.select(*[F.col(f.name).cast(f.dataType).alias(f.name)
+                       for f in RAW_SCHEMA.fields])
 
 
 class HtaStore:
@@ -581,13 +593,7 @@ class HtaStore:
         """The raw points table; ``version`` time-travels to an earlier
         :func:`publish_version` snapshot (e.g. pre-compaction) while it is
         inside the publish ``keep=`` horizon — see :func:`list_versions`."""
-        path = f"{self.base}/raw"
-        if not table_exists(path):
-            return None
-        df = self.spark.read.parquet(resolve_table_version(path, version))
-        if "day" in df.columns:
-            df = df.select("metric", "time", "value", "day")
-        return df
+        return read_raw_table(self.spark, f"{self.base}/raw", version)
 
     @staticmethod
     def day_pruned(raw: DataFrame, begin: int | None, end: int | None) -> DataFrame:
@@ -624,16 +630,17 @@ class HtaStore:
         """Append raw points.  ``validate`` enforces the reference's insert
         guards (t != 0, src/metric.cpp:513-518) batch-wide; strict
         monotonicity across appends is the ingest job's contract (see
-        streaming.ingest for the stateful enforcement)."""
+        streaming.ingest for the stateful enforcement).  Columns are cast
+        to ``RAW_SCHEMA``'s types (see :func:`as_raw`)."""
+        w = as_raw(df)
         if validate:
             # NULL must be caught explicitly: NULL <= 0 is NULL, which the
             # filter drops — a NULL-time row would otherwise persist and
             # silently vanish from every time-range read (review r4)
-            bad = df.filter(F.col("time").isNull() | (F.col("time") <= 0))
+            bad = w.filter(F.col("time").isNull() | (F.col("time") <= 0))
             if bad.limit(1).count() > 0:
                 raise InvalidTimestampError(
                     "cannot insert invalid (NULL or <= 0) time")
-        w = df.select("metric", "time", "value")
         parts = []
         if self.partition_by_metric:
             parts.append("metric")
@@ -679,9 +686,9 @@ class HtaStore:
         if not table_exists(path):
             return 0
         live = resolve_table_path(path)
-        df = self.spark.read.parquet(live)
-        sort_cols = ["metric", "time"] if "time" in df.columns \
-            else ["metric", "interval_start"]
+        df = self.spark.read.schema(
+            RAW_SCHEMA if table == "raw" else AGG_SCHEMA).parquet(live)
+        sort_cols = ["metric", "time" if table == "raw" else "interval_start"]
         # preserve the existing partition layout exactly — a rewrite that
         # drops (or adds) partition columns leaves a mixed directory the
         # next writer makes unreadable.  A "tb" column marks the streaming
@@ -741,8 +748,6 @@ class HtaStore:
         # rollups behind the manifest flip (review r4).  Levels on disk
         # that the subset's new ladders no longer produce still need a
         # republish that strips the rebuilt metrics' stale rows.
-        from ..schemas import AGG_SCHEMA
-        LEVEL_COLUMNS = [f.name for f in AGG_SCHEMA.fields]
         rebuilt = F.broadcast(self.spark.createDataFrame(
             [(m,) for m in metas], "metric string"))
         if subset:

@@ -148,11 +148,8 @@ class IncrementalRollup:
     # reads/appends resolve through the store's manifest indirection so a
     # compacted (atomically republished) table keeps working mid-stream
     def raw(self) -> DataFrame | None:
-        from ..sources.store import resolve_table_path, table_exists
-        p = f"{self.base}/raw"
-        if not table_exists(p):
-            return None
-        return self.spark.read.parquet(resolve_table_path(p))
+        from ..sources.store import read_raw_table
+        return read_raw_table(self.spark, f"{self.base}/raw")
 
     def level(self, interval: int) -> DataFrame | None:
         """Level table (any layout) normalized to the canonical schema —
@@ -168,9 +165,10 @@ class IncrementalRollup:
     def ingest(self, batch: DataFrame) -> None:
         # reference insert guard: t <= 0 is invalid (src/metric.cpp:515-518);
         # reject up front so bogus rows can neither reach raw nor be chosen
-        # as a predecessor anchor for segment integrals
-        batch = (batch.select("metric", "time", "value")
-                 .filter(F.col("time") > 0))
+        # as a predecessor anchor for segment integrals.  Cast to the
+        # declared raw types: the store reads raw with that schema
+        from ..sources.store import as_raw
+        batch = as_raw(batch).filter(F.col("time") > 0)
         # which metrics/time-range this batch *attempts* — needed even when
         # every point turns out to be a duplicate (crash-replay: a previous
         # run may have appended raw but died before level maintenance, so

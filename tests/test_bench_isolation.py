@@ -101,6 +101,7 @@ def test_main_survives_poisoned_cell(spark, monkeypatch, tmp_path, capsys):
     assert headline["metric"] == "headline_suite_sec"
     assert "hta_last" in headline["queries"]
     assert headline["value"] > 0
+    assert headline["cells_failed"] == 1       # the poisoned cell
     detail = json.loads(detail_path.read_text())
     assert "MemoryError" in detail["aggregate_crossover_16m"]["error"]
     assert detail["streaming_ingest_throughput"] == {"s": 1}
