@@ -155,7 +155,7 @@ def queries(housekeep: bool = True) \
     session.  bench.py passes ``housekeep=False`` so timed cells never
     include a full JVM GC pause inside the measured region (ADVICE r14:
     the r14 pipeline-latency figures silently absorbed ~0.1 s of GC per
-    query, breaking PREV_ROUND comparability)."""
+    query, breaking round-over-round comparability)."""
     out = {}
     for name, (fn, _sql) in _registry().items():
         def wrapped(spark, sf_dir, _fn=fn):

@@ -1505,23 +1505,6 @@ def _pipeline_latency(spark, qs) -> dict:
     return out
 
 
-#: round-4 cold (first-pass) per-query seconds from BENCH_r04 — the delta
-#: baseline for this round's report
-PREV_ROUND = {
-    "hta_level1_rollup": 2.363, "hta_level2_rollup": 2.209,
-    "hta_aggregate_range": 2.237, "hta_retrieve_extended": 0.862,
-    "hta_smooth3": 2.051, "hta_throttle": 2.451,
-    "q1_pricing_summary": 0.685, "q3_shipping_priority": 1.472,
-    "q5_local_supplier": 1.43, "q_sessionize": 0.827,
-    "q_asof_signup": 0.546, "dedup_exact": 1.553,
-    "dedup_minhash_lsh": 2.841, "dedup_embedding_cosine": 1.673,
-    "dedup_simhash": 1.073, "text_quality": 0.55,
-    "ann_cosine_topk": 0.562,
-    # r4 insert_throughput cold_sec (first materialization incl. codegen)
-    "rollup_build_16m": 8.897,
-}
-
-
 def _pin_page_cache() -> dict:
     """Read every input byte once, untimed, before pass 1 (VERDICT r3 item
     3: the same suite measured 18.5 s warm vs 43 s on a cold page cache —
@@ -1699,10 +1682,7 @@ def main() -> None:
     detail.update({"partial": True,
                    "page_cache": cache_state,
                    "headline_runs": headline_runs,
-                   "insert_throughput": insert,
-                   "delta_vs_prev_sec": {
-                       k: round(cold_timings[k] - PREV_ROUND[k], 3)
-                       for k in cold_timings if k in PREV_ROUND}})
+                   "insert_throughput": insert})
     write_detail(detail)
     del detail["partial"]
 

@@ -27,8 +27,9 @@ import json
 import os
 import threading
 import time
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 from dataclasses import asdict
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,7 +46,8 @@ from ..operators.stats import count_scoped
 from ..schemas import AGG_SCHEMA, RAW_SCHEMA
 
 __all__ = ["HtaStore", "Metric", "resolve_table_path", "publish_version",
-           "publish_partitions", "read_partition_manifest", "read_level_table",
+           "publish_partitions", "publish_partition_tables",
+           "read_partition_manifest", "read_level_table",
            "read_raw_table", "as_raw", "list_versions",
            "resolve_table_version", "PublishLockError"]
 
@@ -356,26 +358,60 @@ def publish_partitions(spark: SparkSession, path: str, region: DataFrame,
     :class:`PublishLockError` on contention).
 
     Returns the partition keys written."""
+    return publish_partition_tables(
+        spark, {path: region}, os.path.join(path, "_stage"), top,
+        replace_all, lock_timeout_s)[path]
+
+
+def publish_partition_tables(spark: SparkSession,
+                             regions: dict[str, DataFrame], stage: str,
+                             top: int, replace_all: bool = False,
+                             lock_timeout_s: float = 60.0
+                             ) -> dict[str, list[str]]:
+    """:func:`publish_partitions` for several tables with ONE staged write.
+
+    ``regions`` maps table paths, in lease order, to their regions.  Every
+    table's writer lease is taken in that order and held to the end; the
+    union of the regions is written once under ``stage`` (mode
+    overwrite), partitioned by ``(_iv = position in regions, metric,
+    tb)``; then each table flips in order (:func:`_flip_partitions`).  A
+    reader sees each table's pre- or post-publish state.  ``stage`` is
+    single-writer as long as every publisher into it holds one of these
+    tables' leases.  Returns each table's partition keys written."""
     import shutil
-    os.makedirs(path, exist_ok=True)
-    with _writer_lease(path, timeout_s=lock_timeout_s) as lease:
-        return _publish_partitions_locked(spark, path, region, top,
-                                          replace_all, shutil, lease)
+    with ExitStack() as held:
+        leases = []
+        for path in regions:
+            os.makedirs(path, exist_ok=True)
+            leases.append(held.enter_context(
+                _writer_lease(path, timeout_s=lock_timeout_s)))
+        (reduce(DataFrame.unionByName,
+                [r.withColumn("_iv", F.lit(i))
+                 for i, r in enumerate(regions.values())])
+         .write.mode("overwrite").partitionBy("_iv", "metric", "tb")
+         .parquet(stage))
+        out = {path: _flip_partitions(path, os.path.join(stage, f"_iv={i}"),
+                                      top, replace_all, lease)
+               for i, (path, lease) in enumerate(zip(regions, leases))}
+        shutil.rmtree(stage, ignore_errors=True)
+        return out
 
 
-def _publish_partitions_locked(spark, path, region, top, replace_all,
-                               shutil, lease=None) -> list[str]:
+def _flip_partitions(path: str, staged: str, top: int, replace_all: bool,
+                     lease: _Lease) -> list[str]:
+    """Publish one table's staged ``metric=*/tb=*`` dirs (under the held
+    ``lease``): rename each into place as ``v=<n>``, flip the manifest,
+    GC all but the new and the previous version of each touched
+    partition."""
+    import shutil
     doc = read_partition_manifest(path) or {"v": 0, "top": top,
                                             "partitions": {}}
     ver = doc["v"] + 1
-    stage = os.path.join(path, f"_stage_v{ver}")
-    (region.write.mode("overwrite").partitionBy("metric", "tb")
-     .parquet(stage))
     new_parts: list[str] = []
-    for mdir in os.listdir(stage):
+    for mdir in os.listdir(staged) if os.path.isdir(staged) else []:
         if not mdir.startswith("metric="):
             continue
-        for tdir in os.listdir(os.path.join(stage, mdir)):
+        for tdir in os.listdir(os.path.join(staged, mdir)):
             if tdir.startswith("tb="):
                 new_parts.append(f"{mdir}/{tdir}")
     for key in new_parts:
@@ -383,8 +419,7 @@ def _publish_partitions_locked(spark, path, region, top, replace_all,
         os.makedirs(os.path.dirname(dest), exist_ok=True)
         if os.path.exists(dest):             # orphan of a crashed attempt
             shutil.rmtree(dest)
-        os.replace(os.path.join(stage, key), dest)
-    shutil.rmtree(stage, ignore_errors=True)
+        os.replace(os.path.join(staged, key), dest)
     prev = doc["partitions"]
     if replace_all:
         doc["partitions"] = {k: ver for k in new_parts}
@@ -393,8 +428,7 @@ def _publish_partitions_locked(spark, path, region, top, replace_all,
         doc["partitions"].update({k: ver for k in new_parts})
     doc["v"] = ver
     doc["top"] = top
-    if lease is not None:
-        lease.verify()          # still the sole writer, or abort loudly
+    lease.verify()              # still the sole writer, or abort loudly
     _write_partition_manifest(path, doc)
     # GC: drop everything but the new version and the immediately-previous
     # live version per touched partition (in-flight readers of the previous
@@ -406,10 +440,8 @@ def _publish_partitions_locked(spark, path, region, top, replace_all,
             if d.startswith("v=") and int(d[2:]) not in keep:
                 shutil.rmtree(os.path.join(pdir, d), ignore_errors=True)
     if replace_all:
-        staged = set(new_parts)
-        for key in prev:
-            if key not in staged:
-                shutil.rmtree(os.path.join(path, key), ignore_errors=True)
+        for key in set(prev) - set(new_parts):
+            shutil.rmtree(os.path.join(path, key), ignore_errors=True)
     return new_parts
 
 
@@ -457,7 +489,7 @@ def clear_partition_manifest(path: str) -> None:
         return
     os.remove(_pm_path(path))
     for entry in os.listdir(path) if os.path.isdir(path) else []:
-        if entry.startswith("metric=") or entry.startswith("_stage_v"):
+        if entry.startswith(("metric=", "_stage")):
             shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
 
 
@@ -787,10 +819,11 @@ class HtaStore:
                     writer = writer.partitionBy("metric")
                 writer.parquet(target)
 
-            # a full rebuild replaces any streaming partition-manifest
-            # layout with the whole-table versioned one
-            clear_partition_manifest(f"{self.base}/levels/{iv}")
+            # a rebuild replaces any streaming partition-manifest layout
+            # with the whole-table versioned one — cleared only after the
+            # publish, whose write still reads the carried-forward rows
             publish_version(f"{self.base}/levels/{iv}", _write)
+            clear_partition_manifest(f"{self.base}/levels/{iv}")
         for d in cached:
             d.unpersist()
 

@@ -25,11 +25,12 @@ Spark-first mapping:
 - exactly-once: bucket rewrites are deterministic versioned publishes, so
   replaying a batch after a crash converges to the same table — checkpoint
   + idempotent sink.  Consistency: each batch's open-region rewrite goes
-  through the PARTITION MANIFEST (sources/store.py::publish_partitions):
+  through the PARTITION MANIFEST (sources/store.py::
+  publish_partition_tables): every level's region is staged in one write,
   fresh immutable ``v=<n>`` partition dirs land first, then one POSIX
-  rename flips ``_part_manifest.json`` — a reader racing a micro-batch
-  resolves the pre-batch or post-batch partition set, never a mid-swap
-  mix (the reference's flush barrier + torn-tail tolerance,
+  rename per level flips its ``_part_manifest.json`` — a reader racing a
+  micro-batch resolves each level's pre-batch or post-batch partition set,
+  never a mid-swap mix (the reference's flush barrier + torn-tail tolerance,
   /root/reference/src/storage/file/file.hpp:210-247, src/metric.cpp:
   605-609).  Whole-table rewrites elsewhere use the same discipline at
   table granularity (sources/store.py::publish_version);
@@ -45,11 +46,13 @@ or driver-side dicts, so a batch carrying 10^5 metrics plans exactly like
 one carrying 5.
 
 Incremental cost per batch: O(points-in-batch + touched-buckets * levels)
-for the recompute + upsert itself, PLUS the per-batch planning lookups —
-one combined stats aggregate (per-metric max time + rewrite anchor) and,
+for the recompute + upsert itself, in three lineage cuts (the plan frame,
+the enforced batch, the pinned recompute input), one raw append and one
+staged write of every level's region, PLUS the per-batch planning lookups
+— one combined stats aggregate (per-metric max time + rewrite anchor) and,
 for the upsert policy, one duplicate-key anti-join — which scan the
 batch's metrics' raw history.  Those lookups are restricted to the batch's
-metrics by a broadcast semi-join; under the store's metric-partitioned
+metrics by a broadcast join; under the store's metric-partitioned
 layout they prune to those metrics' partitions, and their aggregate shape
 (max of the physically sorted time column) is row-group-stats-friendly —
 but they are NOT history-size-independent on an unpartitioned append-only
@@ -59,13 +62,12 @@ with hot metrics should keep the metric-partitioned layout.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..meta import Meta
 from ..operators.rollup import build_levels
+from ..schemas import RAW_SCHEMA
 
 __all__ = ["IncrementalRollup", "enforce_monotonic"]
 
@@ -124,8 +126,9 @@ class IncrementalRollup:
         ``salt_chunks``: parallelize the per-metric window of each batch's
         level recompute via the salted path (rollup.lagged_salted) — use
         when one metric dominates the stream.  ``"auto"`` measures the
-        recompute input's skew per batch (costs one extra evaluation of
-        the open-region scan, so it is not the streaming default).
+        recompute input's skew per batch (one extra stats job over the
+        pinned open-region input, not a re-read of raw; not the streaming
+        default).
         """
         if policy not in ("strict", "upsert"):
             raise ValueError(f"unknown policy {policy!r}")
@@ -167,104 +170,74 @@ class IncrementalRollup:
         # reject up front so bogus rows can neither reach raw nor be chosen
         # as a predecessor anchor for segment integrals.  Cast to the
         # declared raw types: the store reads raw with that schema
-        from ..sources.store import as_raw
+        from ..sources.store import as_raw, resolve_table_path
         batch = as_raw(batch).filter(F.col("time") > 0)
-        # which metrics/time-range this batch *attempts* — needed even when
-        # every point turns out to be a duplicate (crash-replay: a previous
-        # run may have appended raw but died before level maintenance, so
-        # the replayed epoch must still repair the levels idempotently)
-        # NOTE (SCALE.md Connect table): ingest's four localCheckpoints
-        # are deliberate lineage CUTS, not compat.pin candidates — each
+        # the metrics/time-range this batch *attempts* are the repair scope,
+        # even when every point is a duplicate (crash replay: a previous
+        # run may have appended raw and died before level maintenance).  A
+        # metric with no history always keeps a surviving row.
+        attempted = batch.groupBy("metric").agg(F.min("time").alias("b_min"))
+        existing = self.raw()
+        if existing is None:
+            existing = self.spark.createDataFrame([], RAW_SCHEMA)
+        # ONE pre-append stats pass over the batch metrics' history, one
+        # row per attempted metric: per-metric max time (the monotonic
+        # guard) AND the predecessor of the batch's earliest ATTEMPTED
+        # point (the rewrite anchor; anchoring at the earliest SURVIVING
+        # point left crash-replayed, fully deduped metrics stale, review
+        # r4).  The history rows carry their metric's b_min through the
+        # broadcast join; the union adds the metrics with no history.
+        plan = (existing.join(F.broadcast(attempted), "metric")
+                .select("metric", "time", "b_min")
+                .unionByName(attempted.withColumn(
+                    "time", F.lit(None).cast("long")))
+                .groupBy("metric")
+                .agg(F.max("b_min").alias("b_min"),
+                     F.max("time").alias("_prev_max_t"),
+                     F.max(F.when(F.col("time") < F.col("b_min"),
+                                  F.col("time"))).alias("_pt")))
+        # rewrite bound _rb per metric: the start of the top level's open
+        # interval at the predecessor anchor — everything before it is
+        # closed at every level and therefore immutable.
+        # NOTE (SCALE.md Connect table): ingest's three localCheckpoints —
+        # this plan frame, the enforced batch and the recompute input —
+        # are deliberate lineage CUTS, not compat.pin candidates: each
         # frame's plan reads the store snapshot this epoch is about to
         # append to, and the append's refreshByPath would invalidate a
-        # persist fallback and re-evaluate against the NEW files (dropping
-        # the whole batch as duplicates).  Streaming ingest therefore
-        # requires a runtime whose localCheckpoint works (classic Spark, or
-        # Connect servers that accept it) — a documented gate.
-        attempted = (batch.groupBy("metric")
-                     .agg(F.min("time").alias("b_min"))
-                     .localCheckpoint(eager=True))
-        if attempted.isEmpty():
+        # persist fallback and re-evaluate against the NEW files.
+        # Streaming ingest therefore requires a runtime whose
+        # localCheckpoint works (classic Spark, or Connect servers that
+        # accept it) — a documented gate.
+        anchor = F.coalesce(F.col("_pt"), F.col("b_min"))
+        plan = plan.withColumn(
+            "_rb", F.greatest(anchor - F.pmod(anchor, F.lit(self._top())),
+                              F.lit(0).cast("long"))
+        ).localCheckpoint(eager=True)
+        if plan.isEmpty():
             return
-        existing = self.raw()
-        stats = None
-        if existing is not None:
-            existing_b = existing.join(
-                F.broadcast(attempted.select("metric")), "metric", "left_semi")
-            # ONE pre-append stats pass over the batch metrics' history:
-            # per-metric max time (the monotonic guard) AND the
-            # predecessor of the batch's earliest ATTEMPTED point (the
-            # rewrite anchor) — the r3 design scanned history separately
-            # for each, and anchored at the earliest SURVIVING point,
-            # which left levels stale for metrics whose rows had been
-            # appended by a crashed run and then fully deduped on replay
-            # (review r4).  Anchoring at the attempted minimum is always
-            # <= the surviving minimum, so the recomputed region can only
-            # grow — idempotent-rewrite correctness is unchanged.
-            stats = (existing_b.join(F.broadcast(attempted), "metric")
-                     .groupBy("metric")
-                     .agg(F.max("time").alias("_prev_max_t"),
-                          F.max(F.when(F.col("time") < F.col("b_min"),
-                                       F.col("time"))).alias("_pt"))
-                     .localCheckpoint(eager=True))
-            if self.policy == "strict":
-                batch = enforce_monotonic(
-                    batch, stats.select("metric", "_prev_max_t"))
-            else:
-                # upsert: accept out-of-order points; drop only exact
-                # (metric, time) duplicates vs the store and within batch
-                batch = enforce_monotonic(batch)  # in-batch dedup rules
-                batch = batch.join(existing_b.select("metric", "time"),
-                                   ["metric", "time"], "left_anti")
+        if self.policy == "strict":
+            batch = enforce_monotonic(batch, plan.select("metric",
+                                                         "_prev_max_t"))
         else:
-            batch = enforce_monotonic(batch)
+            # upsert: accept out-of-order points; drop only exact
+            # (metric, time) duplicates vs the store and within batch
+            batch = enforce_monotonic(batch).join(
+                existing.join(F.broadcast(plan.select("metric")),
+                              "metric", "left_semi").select("metric", "time"),
+                ["metric", "time"], "left_anti")
         # cut lineage: the enforced batch's plan reads base/raw (monotonic
         # join), which is about to be appended to and refreshed — a plain
         # cache would be invalidated by the refresh and re-evaluate against
         # the new files, dropping the whole batch as duplicates.
         batch = batch.localCheckpoint(eager=True)
         empty = batch.isEmpty()
-        if empty and existing is None:
-            return
-        # repair scope: every attempted metric that has surviving rows OR
-        # pre-existing raw data (the latter covers crash replay — a prior
-        # run may have appended raw and died before level maintenance, so
-        # even fully-deduped metrics must repair idempotently)
-        if empty:
-            spans = attempted.join(stats.select("metric"),
-                                   "metric", "left_semi")
-        else:
-            keep = batch.select("metric").distinct()
-            if stats is not None:
-                keep = keep.unionByName(stats.select("metric")).distinct()
-            spans = attempted.join(F.broadcast(keep), "metric", "left_semi")
-        # rewrite bound per metric: the start of the top level's open
-        # interval at the batch's predecessor anchor — everything before it
-        # is closed at every level and therefore immutable.  Computed as a
-        # small (metric, _rb) frame, broadcast everywhere below;
-        # materialized (stats checkpoint) BEFORE the raw append.
-        if stats is not None:
-            spans = spans.join(F.broadcast(stats.select("metric", "_pt")),
-                               "metric", "left")
-        else:
-            spans = spans.withColumn("_pt", F.lit(None).cast("long"))
-        anchor = F.coalesce(F.col("_pt"), F.col("b_min"))
-        top = self._top()
-        bounds = spans.select(
-            "metric",
-            F.greatest(anchor - F.pmod(anchor, F.lit(top)),
-                       F.lit(0).cast("long")).alias("_rb"),
-        ).localCheckpoint(eager=True)
-        if bounds.isEmpty():
-            return
         if not empty:
-            from ..sources.store import resolve_table_path
             raw_path = resolve_table_path(f"{self.base}/raw")
             batch.write.mode("append").parquet(raw_path)
             # invalidate the session's cached file listing for the path —
             # otherwise the post-append read may still see the old file set
             self.spark.catalog.refreshByPath(raw_path)
-        self._update_levels(bounds)
+        self._update_levels(plan.select("metric", "_rb"))
         if not empty and self.compact_raw_every:
             self._batches_since_compact += 1
             if self._batches_since_compact >= self.compact_raw_every:
@@ -281,59 +254,61 @@ class IncrementalRollup:
         return n
 
     def _update_levels(self, bounds: DataFrame) -> None:
-        """Recompute exactly the buckets the batch can change, at every level.
+        """Recompute exactly the buckets the batch can change, at every
+        level, and publish them with one staged write.
 
         ``bounds`` is the broadcastable (metric, _rb) rewrite-bound frame.
         The single point before ``_rb`` is included in the recompute input so
         the entering segment (and its count=0 gap buckets) is reproduced
         exactly (the same argument as the reference's ``restore_level``
-        reading only the open tail, metric.cpp:451-497).
+        reading only the open tail, metric.cpp:451-497).  That input is
+        pinned once and the levels derive from it uncached: one write plans
+        every level, so the level-1 shuffle is reused, and no cached
+        Dataset outlives the batch.
+
+        Level tables are partitioned by (metric, tb = interval_start div
+        top_interval); ``_rb`` is top-aligned, so {buckets >= _rb} is an
+        exact partition set.  store.publish_partition_tables stages every
+        level's region under ``<base>/levels/_stage`` and flips the levels'
+        partition manifests in ascending order — O(region) writes, history
+        never touched, each level atomic for a racing reader.  Monotonic
+        ingest (and the upsert policy's predecessor anchoring) guarantees
+        the fresh region covers every previously-published bucket >= _rb.
+        A store-built level table is adopted into the manifest layout at
+        first contact, before the publish takes the levels' leases.
         """
+        from ..sources.store import (_adopt_into_partition_manifest,
+                                     publish_partition_tables,
+                                     read_partition_manifest, table_exists)
         # inner join restricts the scan to the batch's metrics and attaches
         # each row's rewrite bound — column comparisons, no literal
         # predicates, so planning cost is independent of the metric count
         raw_b = self.raw().join(F.broadcast(bounds), "metric")
-        p0 = (raw_b.filter(F.col("time") < F.col("_rb"))
-              .groupBy("metric").agg(F.max("time").alias("_p0")))
-        sub = (raw_b.join(F.broadcast(p0), "metric", "left")
-               .filter((F.col("time") >= F.col("_rb"))
-                       | (F.col("time") == F.col("_p0")))
-               .select("metric", "time", "value"))
-        levels = build_levels(sub, self.meta, salt_chunks=self.salt_chunks)
-        for iv, df in levels.items():
-            self._upsert_level(iv, df, bounds)
-
-    def _upsert_level(self, interval: int, fresh: DataFrame,
-                      bounds: DataFrame) -> None:
-        """Atomic versioned publish of the rewrite region.
-
-        The level table is partitioned by (metric, tb = interval_start div
-        top_interval).  ``_rb`` is top-aligned, so {buckets >= _rb} is an
-        exact partition set; the freshly recomputed region is published
-        through the partition manifest (store.publish_partitions): new
-        immutable ``v=<n>`` dirs first, one atomic manifest flip second —
-        per-batch write cost is O(region), not O(table), history files are
-        never touched, and a racing reader sees the pre- or post-batch
-        state, never a partial swap.  Monotonic ingest (and the upsert
-        policy's predecessor anchoring) guarantees the fresh region covers
-        every previously-published bucket >= _rb, so no stale manifest
-        entry can survive the update.  A pre-existing store-built level
-        table is adopted into the manifest layout once, at first contact.
-        """
-        from ..sources.store import (_adopt_into_partition_manifest,
-                                     publish_partitions,
-                                     read_partition_manifest, table_exists)
-        path = f"{self.base}/levels/{interval}"
+        # the last point before _rb, whole: one aggregate, no join back
+        p0 = (raw_b.filter(F.col("time") < F.col("_rb")).groupBy("metric")
+              .agg(F.max(F.struct("time", "value")).alias("_p0"))
+              .select("metric", "_p0.time", "_p0.value"))
+        sub = (raw_b.filter(F.col("time") >= F.col("_rb"))
+               .select("metric", "time", "value").unionByName(p0)
+               .localCheckpoint(eager=True))
+        levels = build_levels(sub, self.meta, cache_level1=False,
+                              salt_chunks=self.salt_chunks)
         top = self._top()
-        if read_partition_manifest(path) is None and table_exists(path):
-            _adopt_into_partition_manifest(self.spark, path, top)
-        region = (fresh.join(F.broadcast(bounds), "metric")
-                  .filter(F.col("interval_start") >= F.col("_rb"))
-                  .drop("_rb")
-                  .withColumn("tb", F.call_function(
-                      "div", F.col("interval_start"), F.lit(top))))
-        publish_partitions(self.spark, path, region, top)
-        self.spark.catalog.refreshByPath(path)
+        regions = {}
+        for iv, df in levels.items():
+            path = f"{self.base}/levels/{iv}"
+            if read_partition_manifest(path) is None and table_exists(path):
+                _adopt_into_partition_manifest(self.spark, path, top)
+            regions[path] = (
+                df.join(F.broadcast(bounds), "metric")
+                .filter(F.col("interval_start") >= F.col("_rb"))
+                .drop("_rb")
+                .withColumn("tb", F.call_function(
+                    "div", F.col("interval_start"), F.lit(top))))
+        publish_partition_tables(self.spark, regions,
+                                 f"{self.base}/levels/_stage", top)
+        for path in regions:
+            self.spark.catalog.refreshByPath(path)
 
     # -- streaming entry ---------------------------------------------------
     def stream_from(self, stream_df: DataFrame, checkpoint: str,

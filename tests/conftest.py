@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from hta_spark import Meta, SECOND
@@ -41,3 +43,18 @@ def f1_raw(spark):
 def tp(seconds: float) -> int:
     """Timestamp helper matching the reference tests' ``tp(…s)``."""
     return T0 + int(seconds * SECOND)
+
+
+def jobs_in(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the ids
+    of the Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"jobs-in-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))

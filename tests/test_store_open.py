@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import glob
 import os
-import uuid
 
 import pyarrow.parquet as pq
 import pytest
@@ -26,7 +25,7 @@ from hta_spark.sources.store import (read_partition_manifest,
                                      resolve_table_path)
 from hta_spark.streaming.ingest import IncrementalRollup
 
-from .conftest import F1_META, T0
+from .conftest import F1_META, T0, jobs_in
 
 # above spark.sql.sources.parallelPartitionDiscovery.threshold's default
 N_METRICS = 36
@@ -43,21 +42,6 @@ def _points(lo: int, hi: int, as_int: bool = False) -> list[tuple]:
 def _df(spark, pts, value_type: str = "double"):
     return spark.createDataFrame(
         pts, f"metric string, time long, value {value_type}")
-
-
-def _jobs_in(spark, fn):
-    """Run ``fn`` under a fresh job group; return its result and the ids
-    of the Spark jobs it ran."""
-    sc = spark.sparkContext
-    group = f"store-open-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "store open")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _plain_level(spark, path: str):
@@ -101,7 +85,7 @@ def test_open_runs_no_spark_job(spark, tmp_path, make):
     assert (len(doc["partitions"]) if doc else
             len(glob.glob(f"{resolve_table_path(lvl0)}/metric=*"))) > 32
 
-    (raw, levels), jobs = _jobs_in(
+    (raw, levels), jobs = jobs_in(
         spark, lambda: (store.raw(), store.levels_for(F1_META)))
     assert jobs == [], f"opening the store ran Spark jobs {jobs}"
     assert sorted(levels) == F1_META.level_intervals()
@@ -110,12 +94,12 @@ def test_open_runs_no_spark_job(spark, tmp_path, make):
 
     # the streaming writer's own reader is the same declared-schema read
     ing = IncrementalRollup(spark, store.base, F1_META)
-    _, jobs = _jobs_in(spark, lambda: (
+    _, jobs = jobs_in(spark, lambda: (
         ing.raw(), [ing.level(iv) for iv in F1_META.level_intervals()]))
     assert jobs == []
 
     # the counter sees jobs: a plain read infers its schema with one
-    (plain_raw, plain_levels), jobs = _jobs_in(spark, lambda: (
+    (plain_raw, plain_levels), jobs = jobs_in(spark, lambda: (
         spark.read.parquet(resolve_table_path(f"{store.base}/raw"))
         .select("metric", "time", "value"),
         {iv: _plain_level(spark, f"{store.base}/levels/{iv}")
@@ -195,7 +179,7 @@ def test_empty_level_and_numeric_metric_name(spark, tmp_path):
     top = F1_META.level_intervals()[-1]
     live = resolve_table_path(f"{store.base}/levels/{top}")
     assert not glob.glob(f"{live}/**/*.parquet", recursive=True)
-    df, jobs = _jobs_in(spark, lambda: store.level(top))
+    df, jobs = jobs_in(spark, lambda: store.level(top))
     assert jobs == []
     assert df.columns == ["metric", "interval_start", "minimum", "maximum",
                           "sum", "count", "integral", "active_time"]
