@@ -1,19 +1,23 @@
 """R5 — exact aggregate over an arbitrary ns range (SURVEY.md §2.1).
 
-Two implementations with identical results (equivalence-tested):
+One raw kernel, one walk, two entry points (results equivalence-tested):
 
-- :func:`aggregate_exact` — raw-exact single pruned scan; the Spark-idiomatic
-  default.  Mirrors ``Metric::aggregate_raw`` semantics
-  (/root/reference/src/metric.cpp:112-137) with per-metric clamping
-  (/root/reference/src/metric.cpp:160-231: clamp to data range, identity
-  when the range misses the data entirely).
-- :func:`aggregate_telescope` — the reference's multi-resolution telescoping
-  decomposition (metric.cpp:184-227): raw ragged edges + per-level chunks,
-  O(levels * factor) rows touched instead of O(raw).  The scale path when
-  rollups are materialized — at 100 TB a year-long exact aggregate reads a
-  few hundred rollup rows instead of re-scanning raw.
+- :func:`_edge_aggregate_cols` is the one raw kernel: ``aggregate_raw``
+  (reference ``src/metric.cpp:112-137``) over per-metric ``[lo, hi)``
+  bound columns — a pruned scan, one lag window, one grouped aggregate.
+  Its ``("count",)`` projection drops the window for a filtered count.
+- :func:`_telescope_walk` is the one walk: the reference's telescoping
+  decomposition (metric.cpp:184-227) as two raw-edge kernels plus one
+  chunk read per level, merged with the monoid of ``rollup._merge_exprs``
+  over any field projection.  ``stats.count_via_levels`` runs its
+  ``("count",)`` projection.
+- :func:`aggregate_exact` runs the kernel once over the clamped
+  ``[bm, em)`` range (per-metric clamping and identity fill,
+  metric.cpp:160-231); :func:`aggregate_telescope` runs the walk, reading
+  O(levels * factor) rollup rows instead of O(raw).
+  :func:`aggregate_auto` picks between them from rollup statistics.
 
-Postcondition (both): ``active_time == clamped_end - clamped_begin``
+Postcondition (all): ``active_time == clamped_end - clamped_begin``
 (metric.cpp:229; regression-tested per tests/aggregate.cpp:397-521).
 """
 
@@ -26,7 +30,7 @@ from ..chrono import interval_begin, interval_end
 from ..compat import default_parallelism, pin
 from ..errors import InvalidRangeError
 from ..meta import Meta
-from .rollup import raw_range
+from .rollup import _FIELDS, _IDENTITY, _merge_exprs, micro_value, raw_range
 
 __all__ = ["aggregate_exact", "aggregate_telescope", "aggregate_auto",
            "AUTO_ROW_FLOOR", "AUTO_ROW_RATIO"]
@@ -41,24 +45,26 @@ __all__ = ["aggregate_exact", "aggregate_telescope", "aggregate_auto",
 AUTO_ROW_FLOOR = 512_000
 AUTO_ROW_RATIO = 8
 
-_INF = float("inf")
 
-
-def _identity_fill(joined: DataFrame, exact: bool = False) -> DataFrame:
-    """Fill metrics with no in-range contributions with the identity
-    aggregate (min=+inf, max=-inf, rest 0) — ``return {}`` at
+def _identity_fill(ranges: DataFrame, agg: DataFrame,
+                   fields: tuple[str, ...] = _FIELDS) -> DataFrame:
+    """One row per metric of ``ranges``: metrics with no in-range
+    contributions take the monoid identity — ``return {}`` at
     /root/reference/src/metric.cpp:174-178."""
-    sum_zero = F.lit(0).cast("long") if exact else F.lit(0.0)
-    int_zero = F.lit(0).cast("decimal(38,0)") if exact else F.lit(0.0)
-    return joined.select(
-        "metric",
-        F.coalesce(F.col("minimum"), F.lit(_INF)).alias("minimum"),
-        F.coalesce(F.col("maximum"), F.lit(-_INF)).alias("maximum"),
-        F.coalesce(F.col("sum"), sum_zero).alias("sum"),
-        F.coalesce(F.col("count"), F.lit(0)).cast("long").alias("count"),
-        F.coalesce(F.col("integral"), int_zero).alias("integral"),
-        F.coalesce(F.col("active_time"), F.lit(0)).cast("long").alias("active_time"),
-    )
+    return ranges.select("metric").join(agg, "metric", "left").select(
+        "metric", *[F.coalesce(F.col(f), F.lit(_IDENTITY.get(f, 0))).alias(f)
+                    for f in fields])
+
+
+def _clamp(begin: int, end: int) -> tuple:
+    """(valid, bm, em) per-metric column expressions: a metric contributes
+    iff ``begin <= t_last`` and ``end > t_first``, over ``[begin, end)``
+    clamped to its data range (metric.cpp:160-178)."""
+    b_lit, e_lit = F.lit(begin), F.lit(end)
+    valid = (e_lit > F.col("t_first")) & (b_lit <= F.col("t_last"))
+    bm = F.least(F.greatest(b_lit, F.col("t_first")), F.col("t_last"))
+    em = F.least(F.greatest(e_lit, F.col("t_first")), F.col("t_last"))
+    return valid, bm, em
 
 
 def aggregate_exact(raw: DataFrame, begin: int, end: int,
@@ -67,68 +73,21 @@ def aggregate_exact(raw: DataFrame, begin: int, end: int,
     """One row per metric: exact Aggregate over [begin, end) with LAST
     semantics, per-metric clamping and identity fill.
 
-    Fully declarative: filter (pushed to parquet) -> one window lag ->
-    one grouped aggregation.  The pre-window filter is safe because every
-    predecessor timestamp below the clamped begin is clamped to it anyway.
-    ``exact``: order-free integer sum/integral in micro-value units — see
-    rollup._merge_pieces.
+    One run of the raw kernel :func:`_edge_aggregate_cols` over the
+    per-metric clamped ``[bm, em)`` bounds: filter (``time >= begin``
+    pushed to parquet — safe because every valid metric's ``bm >= begin``)
+    -> one window lag -> one grouped aggregation.  ``exact``: order-free
+    integer sum/integral in micro-value units — see rollup._merge_pieces.
     """
     if begin >= end:
         raise InvalidRangeError(
             f"invalid request: begin timestamp {begin} >= end timestamp {end}")
     ranges = ranges if ranges is not None else raw_range(raw)
-
-    # static pushdown bound: for every *valid* metric (begin <= t_last,
-    # end > t_first) the clamped begin bm = max(begin, t_first) >= begin, and
-    # invalid metrics contribute nothing — so `time >= begin` prunes the
-    # parquet scan (join-dependent predicates like `time >= bm` cannot).
-    j = (raw.filter(F.col("time") >= F.lit(begin))
-         .join(F.broadcast(ranges), "metric"))
-    bm = F.greatest(F.least(F.lit(begin), F.col("t_last")), F.col("t_first"))
-    em = F.greatest(F.least(F.lit(end), F.col("t_last")), F.col("t_first"))
-    valid = (F.lit(end) > F.col("t_first")) & (F.lit(begin) <= F.col("t_last"))
-
-    # prune: keep points in [bm, em) plus the first boundary point >= em.
-    # (points below bm only matter as clamped-away predecessors)
-    j = j.filter(valid & (F.col("time") >= bm)).withColumn("_em", em).withColumn("_bm", bm)
-    bounds = j.groupBy("metric").agg(
-        F.min(F.when(F.col("time") >= F.col("_em"), F.col("time"))).alias("_e_pt"))
-    j = (j.join(F.broadcast(bounds), "metric", "left")
-         .filter(F.col("_e_pt").isNull() | (F.col("time") <= F.col("_e_pt"))))
-
-    w = Window.partitionBy("metric").orderBy("time")
-    prev = F.greatest(F.coalesce(F.lag("time").over(w), F.col("_bm")), F.col("_bm"))
-    t, v = F.col("time"), F.col("value")
-    inside = t < F.col("_em")
-
-    contrib = j.select(
-        "metric",
-        v.alias("mv"),
-        F.when(inside, v).alias("sv"),
-        F.when(inside, F.lit(1)).otherwise(F.lit(0)).alias("cnt"),
-        F.when(inside, (t - prev)).otherwise(F.col("_em") - prev).alias("dur"),
-    )
-    if exact:
-        from .rollup import micro_value
-        sum_expr = F.coalesce(F.sum(micro_value(F.col("sv"))),
-                              F.lit(0)).cast("long").alias("sum")
-        integral_expr = F.sum(
-            micro_value(F.col("mv")).cast("decimal(38,0)")
-            * F.col("dur")).alias("integral")
-    else:
-        sum_expr = F.coalesce(F.sum("sv"), F.lit(0.0)).alias("sum")
-        integral_expr = F.sum(
-            F.col("mv") * F.col("dur").cast("double")).alias("integral")
-    agg = contrib.groupBy("metric").agg(
-        F.min("mv").alias("minimum"),
-        F.max("mv").alias("maximum"),
-        sum_expr,
-        F.sum("cnt").cast("long").alias("count"),
-        integral_expr,
-        F.sum("dur").cast("long").alias("active_time"),
-    )
-    return _identity_fill(ranges.select("metric").join(agg, "metric", "left"),
-                          exact=exact)
+    valid, bm, em = _clamp(begin, end)
+    bounds = ranges.filter(valid).select("metric", bm.alias("_bm"),
+                                         em.alias("_em"))
+    return _identity_fill(ranges, _edge_aggregate_cols(
+        raw, bounds, "_bm", "_em", begin, exact=exact))
 
 
 #: planner-stats cache (VERDICT r6 "What's wrong #2"): the store-version
@@ -325,11 +284,8 @@ def _telescope_bounds(ranges: DataFrame, begin: int, end: int,
     from ..chrono import col_interval_begin, col_interval_end
 
     intervals = meta.level_intervals()
-    b_lit, e_lit = F.lit(begin), F.lit(end)
-    df = ranges.filter((e_lit > F.col("t_first"))
-                       & (b_lit <= F.col("t_last")))
-    bm = F.least(F.greatest(b_lit, F.col("t_first")), F.col("t_last"))
-    em = F.least(F.greatest(e_lit, F.col("t_first")), F.col("t_last"))
+    valid, bm, em = _clamp(begin, end)
+    df = ranges.filter(valid)
     m = intervals[0]
     b0 = col_interval_end(bm - 1, m)
     e0 = col_interval_begin(em, m)
@@ -364,18 +320,28 @@ def _telescope_bounds(ranges: DataFrame, begin: int, end: int,
 
 
 def _edge_aggregate_cols(raw: DataFrame, bounds: DataFrame,
-                         lo_col: str, hi_col: str, static_lo: int) -> DataFrame:
-    """``aggregate_raw`` over one ragged edge with PER-METRIC [lo, hi)
-    bound columns from a broadcast frame — scoped scan {closed, extended}
-    with boundary-partial carry (metric.cpp:112-137); contributions only,
-    identity fill happens at the caller.  ``static_lo`` (<= every per-metric lo) is the
-    literal that reaches the parquet scan as a pushed filter."""
+                         lo_col: str, hi_col: str, static_lo: int,
+                         fields: tuple[str, ...] = _FIELDS,
+                         exact: bool = False) -> DataFrame:
+    """The raw kernel: ``aggregate_raw`` with PER-METRIC [lo, hi) bound
+    columns from a broadcast frame — scoped scan {closed, extended} with
+    boundary-partial carry (metric.cpp:112-137); contributions only,
+    identity fill happens at the caller.  ``static_lo`` (<= every
+    per-metric lo) is the literal that reaches the parquet scan as a
+    pushed filter; NULL bounds (metric not in this edge's cover) fail
+    every predicate.  ``fields == ("count",)``: a count needs no
+    predecessor gap and no boundary-partial carry, so the window drops to
+    a filtered map-side-combined count.  ``exact``: micro-value integer
+    sum/integral (see rollup._merge_pieces)."""
     t, v = F.col("time"), F.col("value")
     lo, hi = F.col(lo_col), F.col(hi_col)
     sub = (raw.filter(t >= F.lit(static_lo))
            .join(F.broadcast(bounds.select("metric", lo_col, hi_col)),
                  "metric")
            .filter(t >= lo))
+    if fields == ("count",):
+        return (sub.filter(t < hi).groupBy("metric")
+                .agg(F.count(F.lit(1)).cast("long").alias("count")))
     pts = sub.groupBy("metric").agg(
         F.min(F.when(t >= hi, t)).alias("_e_pt"))
     sub = (sub.join(F.broadcast(pts), "metric", "left")
@@ -390,46 +356,61 @@ def _edge_aggregate_cols(raw: DataFrame, bounds: DataFrame,
         F.when(inside, F.lit(1)).otherwise(F.lit(0)).alias("cnt"),
         F.when(inside, t - prev).otherwise(hi - prev).alias("dur"),
     )
+    mv, sv, dur = F.col("mv"), F.col("sv"), F.col("dur")
+    if exact:
+        sum_expr = F.coalesce(F.sum(micro_value(sv)), F.lit(0)).cast("long")
+        integral = F.sum(micro_value(mv).cast("decimal(38,0)") * dur)
+    else:
+        sum_expr = F.coalesce(F.sum(sv), F.lit(0.0))
+        integral = F.sum(mv * dur.cast("double"))
     return contrib.groupBy("metric").agg(
-        F.min("mv").alias("minimum"),
-        F.max("mv").alias("maximum"),
-        F.coalesce(F.sum("sv"), F.lit(0.0)).alias("sum"),
+        F.min(mv).alias("minimum"),
+        F.max(mv).alias("maximum"),
+        sum_expr.alias("sum"),
         F.sum("cnt").cast("long").alias("count"),
-        F.sum(F.col("mv") * F.col("dur").cast("double")).alias("integral"),
-        F.sum("dur").cast("long").alias("active_time"),
+        integral.alias("integral"),
+        F.sum(dur).cast("long").alias("active_time"),
     )
 
 
 def aggregate_telescope(raw: DataFrame, levels: dict[int, DataFrame], meta: Meta,
                         begin: int, end: int,
                         ranges: DataFrame | None = None) -> DataFrame:
-    """Telescoping exact aggregate via materialized rollups.
-
-    Per-metric clamping makes the decomposition metric-dependent; the
-    whole decomposition is carried as per-metric bound COLUMNS
-    (:func:`_telescope_bounds`), so the plan is ONE static union of
-    2 raw-edge aggregates + one select per level, joined against a
-    broadcast bounds frame — no driver collect anywhere in the path
-    (VERDICT r3 item 8; the r3 version collected the distinct clamped
-    pairs, which was group-count-sized driver state and one plan per
-    group).  10^5 metrics with 10^5 distinct clamps now cost the same
-    plan as one."""
+    """Telescoping exact aggregate via materialized rollups: the six-field
+    projection of :func:`_telescope_walk`."""
     if begin >= end:
         raise InvalidRangeError(
             f"invalid request: begin timestamp {begin} >= end timestamp {end}")
     ranges = ranges if ranges is not None else raw_range(raw)
+    return _telescope_walk(raw, levels, meta, begin, end, ranges, _FIELDS)
+
+
+def _telescope_walk(raw: DataFrame, levels: dict[int, DataFrame], meta: Meta,
+                    begin: int, end: int, ranges: DataFrame,
+                    fields: tuple[str, ...]) -> DataFrame:
+    """The telescope decomposition over the monoid ``fields``.
+
+    Per-metric clamping makes the decomposition metric-dependent; the
+    whole decomposition is carried as per-metric bound COLUMNS
+    (:func:`_telescope_bounds`), so the plan is ONE static union of
+    2 raw-edge kernels + one select per level, joined against a
+    broadcast bounds frame — no driver collect anywhere in the path
+    (VERDICT r3 item 8; the r3 version collected the distinct clamped
+    pairs, which was group-count-sized driver state and one plan per
+    group).  10^5 metrics with 10^5 distinct clamps now cost the same
+    plan as one.  Level frames need only carry ``fields``."""
     # one small eager materialization (metric-count-sized, stays on
     # executors): the bounds frame is broadcast into every union branch,
     # and a lazy subtree would re-run the ranges aggregate per branch
     bounds, intervals = _telescope_bounds(ranges, begin, end, meta)
     bounds = pin(bounds)
 
-    spark = raw.sparkSession
-    parts: list[DataFrame] = [
-        _edge_aggregate_cols(raw, bounds, "_re1_lo", "_re1_hi", begin),
-        _edge_aggregate_cols(raw, bounds, "_re2_lo", "_re2_hi", begin),
-    ]
-    par = max(2, default_parallelism(spark) // 8)
+    def edge(bnd: DataFrame, lo: str, hi: str) -> DataFrame:
+        return _edge_aggregate_cols(raw, bnd, lo, hi, begin, fields)
+
+    parts: list[DataFrame] = [edge(bounds, "_re1_lo", "_re1_hi"),
+                              edge(bounds, "_re2_lo", "_re2_hi")]
+    par = max(2, default_parallelism(raw.sparkSession) // 8)
     s = F.col("interval_start")
     for k, iv in enumerate(intervals):
         lvl = levels.get(iv)
@@ -440,12 +421,10 @@ def aggregate_telescope(raw: DataFrame, levels: dict[int, DataFrame], meta: Meta
             # exact raw scans of the chunks rather than silently
             # undercounting — the aligned [b, e) raw aggregate equals the
             # level-row sum by the path-equivalence invariant
-            parts.append(_edge_aggregate_cols(
-                raw, bounds.filter(lo1.isNotNull() & (lo1 < hi1)),
-                f"_l{k}_lo1", f"_l{k}_hi1", begin))
-            parts.append(_edge_aggregate_cols(
-                raw, bounds.filter(lo2.isNotNull() & (lo2 < hi2)),
-                f"_l{k}_lo2", f"_l{k}_hi2", begin))
+            parts.append(edge(bounds.filter(lo1.isNotNull() & (lo1 < hi1)),
+                              f"_l{k}_lo1", f"_l{k}_hi1"))
+            parts.append(edge(bounds.filter(lo2.isNotNull() & (lo2 < hi2)),
+                              f"_l{k}_lo2", f"_l{k}_hi2"))
             continue
         # chunk [lo, hi) with iv-aligned bounds keeps exactly the buckets
         # lo <= s < hi; NULL bounds (level not in this metric's cover)
@@ -455,19 +434,10 @@ def aggregate_telescope(raw: DataFrame, levels: dict[int, DataFrame], meta: Meta
         # map tasks (~800 at sf0.1) and task overhead dominates.
         sub = (lvl.join(F.broadcast(bounds), "metric")
                .filter(((s >= lo1) & (s < hi1)) | ((s >= lo2) & (s < hi2))))
-        parts.append(sub.select(
-            "metric", "minimum", "maximum", "sum", "count", "integral",
-            "active_time").coalesce(par))
+        parts.append(sub.select("metric", *fields).coalesce(par))
 
     allc = parts[0]
     for p in parts[1:]:
         allc = allc.unionByName(p)
-    agg = allc.groupBy("metric").agg(
-        F.min("minimum").alias("minimum"),
-        F.max("maximum").alias("maximum"),
-        F.sum("sum").alias("sum"),
-        F.sum("count").cast("long").alias("count"),
-        F.sum("integral").alias("integral"),
-        F.sum("active_time").cast("long").alias("active_time"),
-    )
-    return _identity_fill(ranges.select("metric").join(agg, "metric", "left"))
+    return _identity_fill(
+        ranges, allc.groupBy("metric").agg(*_merge_exprs(fields)), fields)

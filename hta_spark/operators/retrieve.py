@@ -24,7 +24,7 @@ from ..compat import pin
 from ..errors import InvalidRangeError
 from ..meta import Meta
 from .aggregate import aggregate_exact
-from .rollup import lagged, segment_pieces, _merge_pieces
+from .rollup import _merge_exprs, _merge_pieces, lagged, segment_pieces
 from .scopes import (ROW_DEFAULT, RAW_DEFAULT, IntervalScope, Scope,
                      check_range, filter_level, filter_raw)
 
@@ -89,15 +89,7 @@ def _smooth_rows(level_rows: DataFrame, interval: int, smooth_factor: int) -> Da
     return (
         level_rows.withColumn("_grp", grp)
         .groupBy("metric", "_grp")
-        .agg(
-            F.min("time").alias("time"),
-            F.min("minimum").alias("minimum"),
-            F.max("maximum").alias("maximum"),
-            F.sum("sum").alias("sum"),
-            F.sum("count").cast("long").alias("count"),
-            F.sum("integral").alias("integral"),
-            F.sum("active_time").cast("long").alias("active_time"),
-        )
+        .agg(F.min("time").alias("time"), *_merge_exprs())
         .select("metric", F.lit(interval).cast("long").alias("interval"),
                 "time", "minimum", "maximum", "sum", "count", "integral",
                 "active_time")

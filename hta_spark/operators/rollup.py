@@ -348,6 +348,31 @@ def micro_value(value: Column) -> Column:
     return F.round(value * F.lit(1e6), 0).cast("long")
 
 
+#: the Aggregate monoid's six fields (reference ``src/aggregate.cpp:37-59``)
+_FIELDS = ("minimum", "maximum", "sum", "count", "integral", "active_time")
+#: each field's identity, the reference's empty ``Aggregate{}``
+#: (reference ``src/metric.cpp:174-178``); the rest are 0
+_IDENTITY = {"minimum": float("inf"), "maximum": float("-inf")}
+
+
+def _merge_exprs(fields: tuple[str, ...] | list[str] = _FIELDS) -> list[Column]:
+    """``Aggregate::operator+=`` (reference ``src/aggregate.cpp:50-59``)
+    over already-aggregated rows, one column per requested field: a field
+    subset is a projection of the monoid."""
+    merge = {"minimum": F.min("minimum"), "maximum": F.max("maximum"),
+             "count": F.sum("count").cast("long"),
+             "active_time": F.sum("active_time").cast("long")}
+    return [merge.get(f, F.sum(f)).alias(f) for f in fields]
+
+
+def _closed(agg: DataFrame, interval: int, ranges: DataFrame) -> DataFrame:
+    """Keep the closed buckets only: ``interval_start + interval <=
+    t_last`` (the open tail lives in the Level state, not storage)."""
+    return (agg.join(F.broadcast(ranges), "metric")
+            .filter(F.col("interval_start") + F.lit(interval) <= F.col("t_last"))
+            .drop("t_first", "t_last"))
+
+
 def _merge_pieces(pieces: DataFrame, interval: int, origin: int = 0,
                   exact: bool = False) -> DataFrame:
     """groupBy (metric, bucket) with the Aggregate monoid
@@ -415,32 +440,28 @@ def build_level1(raw: DataFrame, interval: int,
     lg = (lagged_salted(raw, salt_chunks, ranges) if salt_chunks
           else lagged(raw))
     pieces = segment_pieces(lg, interval)
-    agg = _merge_pieces(pieces, interval, exact=exact)
-    return (
-        agg.join(F.broadcast(ranges), "metric")
-        .filter(F.col("interval_start") + F.lit(interval) <= F.col("t_last"))
-        .drop("t_first", "t_last")
-    )
+    return _closed(_merge_pieces(pieces, interval, exact=exact), interval,
+                   ranges)
 
 
 def build_levels_counts(raw: DataFrame, meta: Meta,
                         ranges: DataFrame | None = None,
                         pin_level1: bool = True) -> dict[int, DataFrame]:
     """Counts-only cascade: dict interval_ns -> (metric, interval_start,
-    count) with the same closed-bucket row set as :func:`build_levels`.
+    count), the ``count`` projection of :func:`build_levels`' levels on
+    the buckets holding a point (the full build also stores closed
+    buckets that only a segment crosses, with count 0; a count sum does
+    not see them).
 
     For consumers that read ONLY the rollup ``count`` field (the
-    telescoped count walk, ``stats.count_via_levels``), the full monoid
-    build computes five fields that are thrown away — and the expensive
-    parts of the build exist ONLY for those fields: the per-metric lag
-    window feeds the segment durations (integral/active_time) and the
-    per-segment bucket explode exists to spread min/max/integral across
-    overlapped buckets.  A bucket's ``count`` is just the number of
-    points inside it, so the counts-only cascade is one map-side-combined
-    groupBy per level — zero windows, zero explodes, one shuffle of
-    ~|level-1| rows (guide §1.2: don't compute what you throw away).
-    Bucket indexing and the closed-bucket filter use the identical
-    expressions as the full build, so the row set matches exactly.
+    telescoped count walk, ``stats.count_via_levels``), the expensive
+    parts of the full build exist only for the other five fields: the
+    per-metric lag window feeds the segment durations and the segment
+    bucket explode spreads min/max/integral across overlapped buckets.
+    A bucket's ``count`` is the number of points inside it, so level 1 is
+    one map-side-combined groupBy (zero windows, zero explodes), and the
+    levels above run :func:`build_levels`' own cascade, whose
+    :func:`build_next_level` merges only the fields its child carries.
 
     ``pin_level1`` (default on — the counts twin of ``build_levels``'
     ``cache_level1``): eagerly materializes the level-1 count frame
@@ -449,61 +470,44 @@ def build_levels_counts(raw: DataFrame, meta: Meta,
     branch re-deriving the level-1 aggregate from raw — racing branches
     inside a single job do not reliably share a lazy cache."""
     ranges = ranges if ranges is not None else raw_range(raw)
-    out: dict[int, DataFrame] = {}
     intervals = meta.level_intervals()
     if not intervals:
-        return out
+        return {}
     d = intervals[0]
-    t = F.col("time")
-    off = t - F.lit(0)
+    off = F.col("time") - F.lit(0)
     k = F.call_function("div", off - F.pmod(off, F.lit(d)), F.lit(d))
-    child = (raw.groupBy("metric", k.alias("k"))
-             .agg(F.count(F.lit(1)).cast("long").alias("count"))
-             .select("metric", (F.col("k") * F.lit(d)).alias("interval_start"),
-                     "count")
-             .join(F.broadcast(ranges), "metric")
-             .filter(F.col("interval_start") + F.lit(d) <= F.col("t_last"))
-             .drop("t_first", "t_last"))
+    lvl = _closed(raw.groupBy("metric", k.alias("k"))
+                  .agg(F.count(F.lit(1)).cast("long").alias("count"))
+                  .select("metric", (F.col("k") * F.lit(d))
+                          .alias("interval_start"), "count"), d, ranges)
     if pin_level1 and len(intervals) > 1:
         from ..compat import pin
-        child = pin(child)
-    out[d] = child
-    for iv in intervals[:-1]:
-        parent = iv * meta.interval_factor
-        pk = (F.col("interval_start")
-              - F.pmod(F.col("interval_start"), F.lit(parent)))
-        child = (child.groupBy("metric", pk.alias("interval_start"))
-                 .agg(F.sum("count").cast("long").alias("count"))
-                 .join(F.broadcast(ranges), "metric")
-                 .filter(F.col("interval_start") + F.lit(parent)
-                         <= F.col("t_last"))
-                 .drop("t_first", "t_last"))
-        out[parent] = child
-    return out
+        lvl = pin(lvl)
+    return _cascade(lvl, meta, ranges)
 
 
 def build_next_level(child: DataFrame, child_interval: int, factor: int,
                      ranges: DataFrame) -> DataFrame:
     """Level n+1 from level n — the ``Metric::insert(Row)`` cascade
-    (/root/reference/src/metric.cpp:562-603) as a monoid re-group."""
+    (reference ``src/metric.cpp:562-603``) as a monoid re-group of the
+    monoid fields ``child`` carries."""
     parent_interval = child_interval * factor
     pk = (F.col("interval_start") - F.pmod(F.col("interval_start"), F.lit(parent_interval)))
-    agg = (
-        child.groupBy("metric", pk.alias("interval_start"))
-        .agg(
-            F.min("minimum").alias("minimum"),
-            F.max("maximum").alias("maximum"),
-            F.sum("sum").alias("sum"),
-            F.sum("count").cast("long").alias("count"),
-            F.sum("integral").alias("integral"),
-            F.sum("active_time").cast("long").alias("active_time"),
-        )
-    )
-    return (
-        agg.join(F.broadcast(ranges), "metric")
-        .filter(F.col("interval_start") + F.lit(parent_interval) <= F.col("t_last"))
-        .drop("t_first", "t_last")
-    )
+    agg = (child.groupBy("metric", pk.alias("interval_start"))
+           .agg(*_merge_exprs([f for f in _FIELDS if f in child.columns])))
+    return _closed(agg, parent_interval, ranges)
+
+
+def _cascade(level1: DataFrame, meta: Meta,
+             ranges: DataFrame) -> dict[int, DataFrame]:
+    """Every level from level 1, each built from the one below."""
+    intervals = meta.level_intervals()
+    out = {intervals[0]: level1}
+    child = level1
+    for iv in intervals[:-1]:
+        child = build_next_level(child, iv, meta.interval_factor, ranges)
+        out[iv * meta.interval_factor] = child
+    return out
 
 
 def materialize_levels(levels: dict[int, DataFrame]) -> None:
@@ -559,17 +563,10 @@ def build_levels(raw: DataFrame, meta: Meta,
         salt_chunks, ranges = plan_build(raw)
     else:
         ranges = raw_range(raw)
-    out: dict[int, DataFrame] = {}
     intervals = meta.level_intervals()
     if not intervals:
-        return out
+        return {}
     lvl = build_level1(raw, intervals[0], ranges, salt_chunks=salt_chunks)
     if cache_level1 and len(intervals) > 1:
         lvl = lvl.cache()
-    out[intervals[0]] = lvl
-    child = lvl
-    for iv in intervals[:-1]:
-        nxt = build_next_level(child, iv, meta.interval_factor, ranges)
-        out[iv * meta.interval_factor] = nxt
-        child = nxt
-    return out
+    return _cascade(lvl, meta, ranges)

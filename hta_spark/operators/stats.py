@@ -3,11 +3,12 @@
 Reference: /root/reference/src/metric.cpp:233-243,441-445;
 /root/reference/src/storage/file/metric.cpp:341-345,497-515.
 
-The reference computes scoped counts from rollup ``count`` sums plus a local
-refine (its prefix-sum index walk).  In Spark a scoped count is a pruned
-``count(*)`` — parquet row-group stats give the same skip-scan effect; for
-very large ranges :func:`count_via_levels` sums rollup counts instead,
-touching O(levels·factor) rows (used by bench to show the scale path).
+A scoped count is a pruned ``count(*)`` (:func:`count_scoped`): parquet
+row-group stats give the reference's skip-scan effect.  For very large
+ranges :func:`count_via_levels` sums rollup counts instead, touching
+O(levels·factor) rows: it is the ``("count",)`` projection of the
+telescope walk in ``aggregate.py``, the same walk the range aggregate
+runs.  :func:`metric_range` is ``rollup.raw_range``.
 """
 
 from __future__ import annotations
@@ -16,10 +17,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..compat import pin
+from .aggregate import _telescope_walk
+from .rollup import raw_range
 from .scopes import RAW_DEFAULT, IntervalScope, filter_raw
 
 __all__ = ["count_scoped", "count_total", "count_via_levels", "metric_range",
            "last_point"]
+
+#: (first, last) timestamp pair per metric — the one range function
+metric_range = raw_range
 
 
 def count_scoped(raw: DataFrame, begin: int, end: int,
@@ -31,81 +37,6 @@ def count_scoped(raw: DataFrame, begin: int, end: int,
 
 def count_total(raw: DataFrame) -> DataFrame:
     return raw.groupBy("metric").agg(F.count("*").alias("n"))
-
-
-def metric_range(raw: DataFrame) -> DataFrame:
-    """(first, last) timestamp pair per metric."""
-    return raw.groupBy("metric").agg(
-        F.min("time").alias("t_first"), F.max("time").alias("t_last"))
-
-
-def _edge_count(raw: DataFrame, bounds: DataFrame, lo_col: str,
-                hi_col: str, static_lo: int) -> DataFrame:
-    """Per-metric point count over one ragged edge with PER-METRIC
-    [lo, hi) bound columns from a broadcast frame.  The count-only twin
-    of ``aggregate._edge_aggregate_cols``: a count needs no predecessor
-    gap and no boundary-partial carry, so the window/lag machinery drops
-    to a filtered map-side-combined count.  NULL bounds (metric not in
-    this edge's cover) fail the predicate."""
-    from pyspark.sql import functions as F
-    t = F.col("time")
-    lo, hi = F.col(lo_col), F.col(hi_col)
-    return (raw.filter(t >= F.lit(static_lo))
-            .join(F.broadcast(bounds.select("metric", lo_col, hi_col)),
-                  "metric")
-            .filter((t >= lo) & (t < hi))
-            .groupBy("metric")
-            .agg(F.count(F.lit(1)).cast("long").alias("count")))
-
-
-def count_telescope(raw: DataFrame, levels: dict, meta, begin: int,
-                    end: int, ranges: DataFrame) -> DataFrame:
-    """The telescope decomposition (aggregate._telescope_bounds — the
-    SAME per-metric bound columns the full aggregate walks) summing ONLY
-    the rollup ``count`` field: per-level chunk reads + two raw-edge
-    counts, one union aggregate.  Accepts full-monoid level frames or
-    the pruned ``rollup.build_levels_counts`` frames — only ``count`` is
-    read.  Metrics with no in-range contribution fill with 0 (the
-    aggregate's identity count)."""
-    from pyspark.sql import functions as F
-
-    from ..compat import default_parallelism
-    from .aggregate import _telescope_bounds
-
-    bounds, intervals = _telescope_bounds(ranges, begin, end, meta)
-    bounds = pin(bounds)
-    parts = [
-        _edge_count(raw, bounds, "_re1_lo", "_re1_hi", begin),
-        _edge_count(raw, bounds, "_re2_lo", "_re2_hi", begin),
-    ]
-    par = max(2, default_parallelism(raw.sparkSession) // 8)
-    s = F.col("interval_start")
-    for k, iv in enumerate(intervals):
-        lvl = levels.get(iv)
-        lo1, hi1 = F.col(f"_l{k}_lo1"), F.col(f"_l{k}_hi1")
-        lo2, hi2 = F.col(f"_l{k}_lo2"), F.col(f"_l{k}_hi2")
-        if lvl is None:
-            # missing rollup level: raw-count the chunks (the aligned
-            # [b, e) raw count equals the level-row count sum)
-            parts.append(_edge_count(
-                raw, bounds.filter(lo1.isNotNull() & (lo1 < hi1)),
-                f"_l{k}_lo1", f"_l{k}_hi1", begin))
-            parts.append(_edge_count(
-                raw, bounds.filter(lo2.isNotNull() & (lo2 < hi2)),
-                f"_l{k}_lo2", f"_l{k}_hi2", begin))
-            continue
-        sub = (lvl.join(F.broadcast(bounds), "metric")
-               .filter(((s >= lo1) & (s < hi1)) | ((s >= lo2) & (s < hi2))))
-        parts.append(sub.select("metric", "count").coalesce(par))
-    allc = parts[0]
-    for p in parts[1:]:
-        allc = allc.unionByName(p)
-    agg = allc.groupBy("metric").agg(
-        F.sum("count").cast("long").alias("count"))
-    return (ranges.select("metric").join(agg, "metric", "left")
-            .select("metric",
-                    F.coalesce(F.col("count"), F.lit(0))
-                    .cast("long").alias("count")))
 
 
 def count_via_levels(raw: DataFrame, levels: dict, meta, begin: int,
@@ -121,24 +52,19 @@ def count_via_levels(raw: DataFrame, levels: dict, meta, begin: int,
     to the last point and counts points in [begin, t_last) — the last point
     itself needs a +1 correction when ``begin <= t_last < end``.
 
-    r15 (guide §1.2 "don't compute what you throw away"): the walk now
-    runs :func:`count_telescope` — the same telescope decomposition
-    reading ONLY the ``count`` field — instead of the full six-field
-    aggregate whose min/max/sum/integral were discarded here; the raw
-    edges drop their lag windows for plain filtered counts.  Counts are
-    integers summed over the identical disjoint decomposition, so the
-    result is bit-identical.  Pair with
-    :func:`~hta_spark.operators.rollup.build_levels_counts` so the level
-    CASCADE is pruned too (no lag window, no segment explode)."""
-    from pyspark.sql import functions as F
-
-    from .rollup import raw_range
+    The walk is the ``("count",)`` projection of the aggregate's telescope
+    walk: it reads only the rollup ``count`` field, and its raw edges drop
+    the lag window for plain filtered counts.  Counts are integers summed
+    over the identical disjoint decomposition, so the result is
+    bit-identical to the full aggregate's.  ``levels`` may be full-monoid
+    frames or the :func:`~hta_spark.operators.rollup.build_levels_counts`
+    projection, whose cascade runs no window and no segment explode."""
     # one eager metric-count-sized materialization: the lazy ranges plan
     # would re-execute its full-raw aggregate in the telescope's identity
     # fill AND the correction join below — 2 extra raw scans in the
     # operator whose whole point is avoiding raw scans (review r4)
     ranges = pin(raw_range(raw))
-    agg = count_telescope(raw, levels, meta, begin, end, ranges=ranges)
+    agg = _telescope_walk(raw, levels, meta, begin, end, ranges, ("count",))
     corr = F.when((F.lit(begin) <= F.col("t_last"))
                   & (F.col("t_last") < F.lit(end)), 1).otherwise(0)
     return (agg.join(F.broadcast(ranges), "metric")

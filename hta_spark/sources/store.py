@@ -34,13 +34,13 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..compat import pin
 from ..errors import InvalidTimestampError, MissingMetricConfigError
 from ..meta import Meta
-from ..operators.aggregate import aggregate_exact, aggregate_telescope
+from ..operators.aggregate import (aggregate_auto, aggregate_exact,
+                                   aggregate_telescope)
 from ..operators.retrieve import (retrieve_flex, retrieve_min_samples,
                                   retrieve_raw, retrieve_rows)
-from ..operators.rollup import build_levels
+from ..operators.rollup import build_levels, raw_range
 from ..operators.scopes import (RAW_DEFAULT, ROW_DEFAULT, IntervalScope)
 from ..operators.stats import count_scoped
 from ..schemas import AGG_SCHEMA, RAW_SCHEMA
@@ -877,40 +877,28 @@ class Metric:
     def aggregate(self, begin: int, end: int,
                   use_levels: bool | str = "auto") -> DataFrame:
         """Exact range aggregate.  ``use_levels``: ``"auto"`` (default)
-        estimates both paths from the coarsest rollup and dispatches
-        (aggregate_auto's cost model — the reference always telescopes,
-        metric.cpp:160-231, but Spark's per-branch stage overhead makes
-        small ranges faster as one raw windowed scan); ``True`` forces
-        the telescope, ``False`` the raw-exact scan.  Results are
-        path-independent."""
-        from ..operators.aggregate import (AUTO_ROW_FLOOR,
-                                           AUTO_ROW_RATIO, _auto_choice)
-        from ..operators.rollup import raw_range
-        if begin >= end:
-            from ..errors import InvalidRangeError
-            raise InvalidRangeError(
-                f"invalid request: begin timestamp {begin} >= "
-                f"end timestamp {end}")
-        levels = self._levels() if use_levels in (True, "auto") else {}
-        ranges = None
-        if use_levels == "auto" and levels:
-            ranges = pin(raw_range(self._raw()))
-            choice, _r, _t = _auto_choice(levels, self.meta, begin, end,
-                                          ranges, AUTO_ROW_FLOOR,
-                                          AUTO_ROW_RATIO)
-            use_levels = choice == "telescope"
-        if use_levels is True and levels:
-            return aggregate_telescope(self._raw(), levels, self.meta,
-                                       begin, end, ranges=ranges)
-        # lower day-bound is safe for the scan (only points >= clamped begin
-        # contribute) — but per-metric ranges must come from the *unpruned*
-        # table, or clamping would see a false t_first; the upper boundary
-        # point may be days later, so no upper bound.
+        runs :func:`aggregate_auto`'s cost model (the reference always
+        telescopes, metric.cpp:160-231, but Spark's per-branch stage
+        overhead makes small ranges faster as one raw windowed scan);
+        ``True`` forces the telescope, ``False`` the raw-exact scan.
+        Results are path-independent.
+
+        Every path reads the raw table day-pruned from ``begin`` (only
+        points >= the clamped begin contribute; the upper boundary point
+        may be days later, so no upper bound), with per-metric ranges
+        from the *unpruned* table, or clamping would see a false
+        ``t_first``."""
         raw = self._raw()
-        return aggregate_exact(HtaStore.day_pruned(raw, begin, None),
-                               begin, end,
-                               ranges=ranges if ranges is not None
-                               else raw_range(raw))
+        ranges = raw_range(raw)
+        pruned = HtaStore.day_pruned(raw, begin, None)
+        levels = self._levels() if use_levels in (True, "auto") else {}
+        if not levels:
+            return aggregate_exact(pruned, begin, end, ranges=ranges)
+        if use_levels == "auto":
+            return aggregate_auto(pruned, levels, self.meta, begin, end,
+                                  ranges=ranges)
+        return aggregate_telescope(pruned, levels, self.meta, begin, end,
+                                   ranges=ranges)
 
     def count(self, begin: int | None = None, end: int | None = None,
               scope: IntervalScope = RAW_DEFAULT) -> int:

@@ -293,3 +293,39 @@ def test_q18_having_subquery_broadcasts(spark):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert len(re.findall(r"\bExchange\b", plan)) <= 2, plan
+
+
+def _executed_nodes(df) -> dict[str, int]:
+    """Run ``df`` and count the operator names in its executed plan: the
+    final adaptive plans, cached and broadcast subtrees included, each
+    ``== Initial Plan ==`` section skipped."""
+    from collections import Counter
+    df.collect()
+    txt = df._jdf.queryExecution().executedPlan().toString()
+    out: Counter = Counter()
+    skip = None
+    for line in txt.splitlines():
+        m = re.match(r"^([\s:|+\-]*)(?:\*\(\d+\)\s+)?(.*)$", line)
+        depth, node = len(m.group(1)), m.group(2)
+        if skip is not None and depth >= skip:
+            continue
+        skip = depth if node.startswith("== Initial Plan ==") else None
+        name = re.match(r"[A-Za-z]\w*", node)
+        if skip is None and name:
+            out[name.group(0)] += 1
+    return out
+
+
+def test_count_walk_window_free_exact_one_window(spark, f1_raw):
+    """The shared raw kernel keeps its count-only projection window-free:
+    the count walk over the counts-only cascade runs no Window and no
+    Generate, while the raw-exact aggregate keeps exactly one Window."""
+    from hta_spark.operators import count_via_levels
+    from hta_spark.operators.rollup import build_levels_counts
+    from .conftest import F1_META, tp
+    levels = build_levels_counts(f1_raw, F1_META)
+    walk = _executed_nodes(count_via_levels(f1_raw, levels, F1_META,
+                                            tp(11), tp(225)))
+    assert walk["Window"] == 0 and walk["Generate"] == 0, walk
+    exact = _executed_nodes(aggregate_exact(f1_raw, tp(11), tp(225)))
+    assert exact["Window"] == 1, exact

@@ -10,6 +10,7 @@ import pytest
 
 from hta_spark import Meta, SECOND
 from hta_spark.operators import build_levels, retrieve_flex
+from hta_spark.operators.rollup import build_levels_counts
 from hta_spark.operators.tools import (check_levels, check_raw, clone, dummy,
                                        repair, throttle)
 
@@ -98,16 +99,63 @@ def test_flex_total_aggregate(spark, f1_raw):
     assert r["active_time"] == 200 * SECOND
 
 
-def test_count_via_levels_matches_raw(spark, f1_raw):
+def _staggered_points() -> list[tuple[str, int, float]]:
+    """Three metrics with staggered first/last times and densities."""
+    pts = []
+    for mi, (off, step, n) in enumerate([(0, 7, 90), (150, 3, 200),
+                                         (400, 13, 40)]):
+        pts += [(f"m{mi}", tp(off + i * step) + mi * 1000,
+                 float((i * 37 + mi * 11) % 23) - 7.5) for i in range(n)]
+    return pts
+
+
+_LEVEL_DICTS = {
+    "build_levels": lambda raw: build_levels(raw, F1_META),
+    "build_levels_counts": lambda raw: build_levels_counts(raw, F1_META),
+    "finest_dropped": lambda raw: {
+        iv: df for iv, df in build_levels(raw, F1_META).items()
+        if iv != F1_META.interval_min},
+    "no_levels": lambda raw: {},
+}
+
+
+@pytest.mark.parametrize("levels_of", list(_LEVEL_DICTS))
+def test_count_via_levels_matches_raw(spark, f1_raw, levels_of):
+    """The count walk equals a plain pruned count on full-monoid levels,
+    on the count projection, with the finest level missing (raw chunk
+    fallback) and with no level at all."""
     from pyspark.sql import functions as F
     from hta_spark.operators import count_via_levels
-    levels = build_levels(f1_raw, F1_META)
-    for b_s, e_s in [(20, 220), (11, 225), (0, 500), (12, 20), (110, 125)]:
-        b, e = tp(b_s), tp(e_s)
-        via = {r["metric"]: r["n"]
-               for r in count_via_levels(f1_raw, levels, F1_META, b, e).collect()}
-        direct = f1_raw.filter((F.col("time") >= b) & (F.col("time") < e)).count()
-        assert via.get("foo", 0) == direct, (b_s, e_s)
+    from .conftest import f1_points
+    stag_pts = _staggered_points()
+    stag = spark.createDataFrame(stag_pts,
+                                 "metric string, time long, value double")
+    cases = [(f1_raw, f1_points(),
+              [(20, 220), (11, 225), (0, 500), (12, 20), (110, 125)]),
+             (stag, stag_pts, [(5, 640), (149, 433), (400, 401)])]
+    for raw, pts, spans in cases:
+        levels = _LEVEL_DICTS[levels_of](raw)
+        via = None
+        for i, (b_s, e_s) in enumerate(spans):
+            df = count_via_levels(raw, levels, F1_META, tp(b_s), tp(e_s))
+            df = df.withColumn("span", F.lit(i))
+            via = df if via is None else via.unionByName(df)
+        got = {(r["span"], r["metric"]): r["n"] for r in via.collect()}
+        want = {(i, m): sum(pm == m and tp(b_s) <= t < tp(e_s)
+                            for pm, t, _ in pts)
+                for i, (b_s, e_s) in enumerate(spans)
+                for m in {p[0] for p in pts}}
+        assert got == want
+    if levels_of == "build_levels_counts":
+        full = build_levels(stag, F1_META)
+        counts = build_levels_counts(stag, F1_META)
+        assert sorted(counts) == sorted(full)
+        for iv, df in counts.items():
+            # the full build also stores buckets that only a segment
+            # crosses (count 0); they add nothing to a count sum
+            proj = (full[iv].filter(F.col("count") > 0)
+                    .select("metric", "interval_start", "count"))
+            assert sorted(df.collect()) == sorted(proj.collect()), iv
 
 
 def test_approx_functions_sane(spark):
