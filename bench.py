@@ -1183,88 +1183,6 @@ def _se_trim_spans(spark, n_docs: int = 1_000_000, k: int = 8) -> dict:
                                                / max(half_sec, 1e-9), 2)}
 
 
-def _se_strip_dispatch(spark, n_docs: int = 100_000,
-                       per_doc_hot: int = 8) -> dict:
-    """scale_evidence (i, r14 — VERDICT r13 item 4 / note #2): the
-    ``strip_boilerplate_lines`` size dispatch at its MEASURED default
-    cap (``hot_broadcast_cap = 10_000``), with the broadcast arm's
-    per-row structure cost swept across the boundary.
-
-    10^6 corpus lines (10^5 docs x 8 pool + 2 unique lines) with the
-    hot-pool size swept 10^3 / 10^4 (the cap) / 10^5: r14 replaced the
-    old single-array ``array_contains`` (a linear string scan per line
-    — 59 s at 10^5 vs the anti-join arm's 1.5 s) with an all-primitive
-    md5 hash table (~16 bytes/hot line), but measurement showed the
-    floor is the per-corpus-row RE-MATERIALIZATION of the joined
-    broadcast structure — O(structure bytes) per row regardless of
-    probe cost (13.5 s at 10^5, ~3.6 s at the cap, vs anti-join
-    ~2.2 s flat on this shuffle-free local corpus).  The default cap
-    sits at the measured break-even given that at CLUSTER scale the
-    anti-join arm adds three network shuffles of the whole corpus
-    which the broadcast arm avoids.  Both arms must
-    fingerprint-identical at every size; a pool one past the cap must
-    dispatch to the anti-join arm."""
-    from pyspark.sql import functions as F
-    from hta_spark.pipeline.text import (strip_boilerplate_arm,
-                                         strip_boilerplate_lines)
-
-    def corpus(n_hot):
-        pool = F.transform(
-            F.sequence(F.lit(0), F.lit(per_doc_hot - 1)),
-            lambda j: F.concat(
-                F.lit("hot line number "),
-                F.pmod(F.col("id") * per_doc_hot + j.cast("long"),
-                       F.lit(n_hot)).cast("string"),
-                F.lit(" shared boilerplate padding text")))
-        uniq = F.transform(
-            F.sequence(F.lit(0), F.lit(1)),
-            lambda j: F.concat(F.lit("unique body line "),
-                               F.col("id").cast("string"), F.lit(" "),
-                               j.cast("string")))
-        return (spark.range(n_docs).repartition(32)
-                .select(F.col("id").alias("doc_id"),
-                        F.array_join(F.concat(pool, uniq), "\n")
-                        .alias("text")).cache())
-
-    sweep = {}
-    arm_at_cap = arm_past_cap = None
-    for n_hot in (1_000, 10_000, 100_000):
-        df = corpus(n_hot)
-        df.count()
-        arms = {}
-        for arm, cap in (("broadcast", 10 ** 9), ("antijoin", 0)):
-            t0 = time.perf_counter()
-            n, h = _hash_set(
-                strip_boilerplate_lines(df, max_line_df=4,
-                                        hot_broadcast_cap=cap),
-                ["doc_id", "text", "n_removed"])
-            arms[arm] = {"sec": round(time.perf_counter() - t0, 3),
-                         "fp": (n, h)}
-        if n_hot == 10_000:
-            # dispatch binding at the default cap, on the already-cached
-            # boundary corpus: exactly cap hot lines stays broadcast,
-            # one slot fewer goes anti-join (the planner count sees
-            # n_hot > cap)
-            arm_at_cap = strip_boilerplate_arm(df, max_line_df=4)
-            arm_past_cap = strip_boilerplate_arm(df, max_line_df=4,
-                                                 hot_broadcast_cap=9_999)
-        df.unpersist()
-        sweep[n_hot] = {
-            "broadcast_sec": arms["broadcast"]["sec"],
-            "antijoin_sec": arms["antijoin"]["sec"],
-            "arms_equal": arms["broadcast"]["fp"] == arms["antijoin"]["fp"]}
-    b1k, bcap = (sweep[1_000]["broadcast_sec"],
-                 sweep[10_000]["broadcast_sec"])
-    return {"corpus_lines": n_docs * (per_doc_hot + 2),
-            "default_cap": 10_000, "sweep": sweep,
-            "arms_equal_all": all(v["arms_equal"] for v in sweep.values()),
-            "broadcast_1k_to_cap_ratio": round(bcap / max(b1k, 1e-9), 2),
-            "dispatch_at_cap": arm_at_cap,
-            "dispatch_past_cap": arm_past_cap,
-            "dispatch_binding": (arm_at_cap == "broadcast"
-                                 and arm_past_cap == "antijoin")}
-
-
 # labels of the cells that failed in this run; the headline reports the
 # count as ``cells_failed``, so an rc-0 record still says a cell crashed
 _CELL_FAILURES: list[str] = []
@@ -1310,8 +1228,7 @@ def _scale_evidence(spark) -> dict:
         ("top_fraction_dispatch", _se_top_fraction),
         ("incremental_neardup", _se_incremental_neardup),
         ("repeated_spans_linear", _se_repeated_spans),
-        ("trim_spans_rewrite", _se_trim_spans),
-        ("strip_boilerplate_dispatch", _se_strip_dispatch))}
+        ("trim_spans_rewrite", _se_trim_spans))}
 
 
 def _streaming_throughput(spark, n: int = 2 ** 21) -> dict:

@@ -342,6 +342,10 @@ def retrieve_min_samples(raw: DataFrame, levels: dict[int, DataFrame], meta: Met
                          scope: IntervalScope = ROW_DEFAULT) -> DataFrame:
     """R3 — pixel-oriented API: ``interval_upper = (end-begin)/min_samples``
     then R2 (/root/reference/src/metric.cpp:245-257)."""
+    # min_samples >= 1: 0 has no interval, and a negative one would turn
+    # into the negative limit that requests the single total aggregate
+    if min_samples < 1:
+        raise ValueError(f"min_samples must be >= 1, got {min_samples}")
     if begin > end:
         raise InvalidRangeError(
             f"invalid request: begin timestamp {begin} larger than end {end}")

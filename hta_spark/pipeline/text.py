@@ -183,8 +183,7 @@ def fingerprint(docs: DataFrame, text_col: str = "text",
 def strip_boilerplate_lines(docs: DataFrame, max_line_df: int = 64,
                             text_col: str = "text",
                             id_col: str = "doc_id",
-                            line_sep: str = "\n",
-                            hot_broadcast_cap: int = 10_000) -> DataFrame:
+                            line_sep: str = "\n") -> DataFrame:
     """LINE-level boilerplate removal (the CCNet / RefinedWeb curation
     step): a trimmed line appearing in more than ``max_line_df``
     DISTINCT documents is boilerplate — navigation chrome, cookie
@@ -199,225 +198,39 @@ def strip_boilerplate_lines(docs: DataFrame, max_line_df: int = 64,
     ``n_lines`` (original line count) and ``n_removed``.  A document
     whose lines are all boilerplate keeps its row with empty text.
     NULL text is NULL-in -> NULL-out: the row passes through with
-    ``text = NULL`` and ``n_lines = n_removed = NULL`` in BOTH arms
-    (VERDICT r13 — the anti-join arm used to rewrite NULL to '').
+    ``text = NULL`` and ``n_lines = n_removed = NULL``.
     Ubiquitous blank lines count like any other trimmed line, so they
     collapse once the corpus exceeds ``max_line_df`` — the usual
     curation outcome.  The kept text is a pure function of the corpus
     line-frequency table: rerun/backfill-stable, partition-invariant.
 
-    Scale shape — size-dispatched on the HOT-SET size, not the corpus
-    (one planner count over the per-document-DISTINCT line stream,
-    which is computed map-side with ``array_distinct`` so a line
-    repeated inside one document counts once and never shuffles as
-    duplicates):
+    ``id_col`` must be unique per row and non-NULL: the kept lines
+    regroup on it and join back to ``docs`` on it, so rows sharing an
+    id mix their lines and a NULL-id row comes back with empty text.
 
-    - hot set <= ``hot_broadcast_cap``: the hot lines compile into ONE
-      broadcast hash-table row of PRIMITIVE arrays — per-bucket
-      start/count int vectors plus the md5 halves of each hot line
-      interleaved in one flat ``array<bigint>`` — and the strip is
-      IN-ROW (O(1) bucket fetch + an expected ~2-pair hash scan per
-      line): ZERO shuffle of the corpus, the same zero-state shape as
-      ``bloom_decontaminate``.  Membership is by 120-bit md5 of the
-      trimmed line — the same exactness class as every content-hash
-      operator here (``exact_dedup`` keys on md5 the same way).
-      (r14, VERDICT r13 note #2: the old single-array
-      ``array_contains`` was a LINEAR string scan per line — measured
-      59 s vs the anti-join arm's 1.5 s at a 10^5 hot set on 10^6
-      corpus lines.  Measurement also showed the real floor: a
-      broadcast-joined column is RE-MATERIALIZED PER CORPUS ROW, so
-      per-row cost is O(structure bytes) no matter how the probe
-      indexes it — string payloads copy ~10-20x slower than primitive
-      ones, hence the all-primitive layout, ~16 bytes/hot line.)
-      The DEFAULT cap is a COST-MODEL choice, not a local measurement
-      (r15, VERDICT r14 note #2: the strip_boilerplate_dispatch sweep
-      shows the anti-join arm FASTER at every measured hot-set size on
-      a single-JVM local[32], where its three "shuffles" are
-      in-process memory moves).  Per corpus row the broadcast arm pays
-      ~16 B x n_hot of structure copy; at CLUSTER scale the anti-join
-      arm instead ships every corpus LINE over the network three times
-      (df count, anti join, doc regroup — ~3 x line bytes per line,
-      plus the regroup sort).  Break-even is roughly n_hot ~=
-      3 x avg_line_bytes / 16 B x (network cost / memcpy cost) — order
-      10^4 for ~60-byte lines at a conservative ~30x network factor —
-      hence ``hot_broadcast_cap = 10_000``.  A local caller who wants
-      the locally-faster arm picks it deliberately with
-      ``hot_broadcast_cap=-1`` (always anti-join — the knob the gated
-      anti twin uses; 0 still dispatches an EMPTY hot set to the
-      trivially-cheap broadcast arm).  Boilerplate is by definition
-      high-frequency, so #hot <= corpus_lines / max_line_df and this
-      arm is the common case.
-    - bigger hot set: lines explode with positions, drop by a LEFT ANTI
-      join on the hot frame (AQE picks the strategy), and documents
-      reassemble with one grouped ``array_sort(collect_list(struct))``
-      — three shuffles, all keyed (line df, anti join, doc regroup).
-
-    Both arms return the identical frame (equality-tested); the
-    dispatch is observable via ``strip_boilerplate_arm``."""
+    Scale shape — one lazy plan, no planner job: the line df is
+    counted over the per-document-DISTINCT line stream
+    (``array_distinct`` map-side, so a line repeated inside one
+    document counts once and never shuffles as a duplicate); lines
+    explode with positions, drop by a LEFT ANTI join on the hot-line
+    frame, and documents reassemble with one grouped
+    ``array_sort(collect_list(struct))`` — three keyed shuffles of the
+    line stream (line df, anti join, doc regroup; the anti join is a
+    broadcast instead when the hot frame is small), then one
+    ``id_col``-keyed join back to ``docs``.  An in-row broadcast
+    hash-table probe of the hot set was slower than this plan at every
+    measured hot-set size (10^3 to 10^5 hot lines over 10^6 corpus
+    lines)."""
     import re as _re
 
-    pat = _re.escape(line_sep)
-    lines_arr = F.split(F.col(text_col), pat, -1)
+    lines_arr = F.split(F.col(text_col), _re.escape(line_sep), -1)
     norm_arr = F.array_distinct(
         F.transform(lines_arr, lambda x: F.trim(x)))
-    per_doc = docs.select(F.col(id_col).alias("_id"),
-                          F.explode(norm_arr).alias("_norm"))
-    hot = (per_doc.groupBy("_norm")
-           .agg(F.count(F.lit(1)).cast("long").alias("_df"))
+    hot = (docs.select(F.explode(norm_arr).alias("_norm"))
+           .groupBy("_norm")
+           .agg(F.count(F.lit(1)).alias("_df"))
            .filter(F.col("_df") > F.lit(int(max_line_df)))
            .select("_norm"))
-    from .. import compat
-    if compat.lc_available(docs.sparkSession):
-        # the planner count below plus the broadcast arm's two table
-        # aggregates (prefix + hashes) each read this <= cap-sized
-        # frame; without the pin each re-ran the corpus line-df
-        # aggregation (the semantic_pairs no-release gate: the returned
-        # lineage reads it, so Connect fallback stays lazy)
-        hot = compat.pin(hot)
-    n_hot = hot.count()               # planner job (throttle_auto style)
-    out_cols = list(docs.columns)
-    n_lines = F.size(lines_arr).cast("long")
-    if n_hot <= int(hot_broadcast_cap):
-        # dense power-of-two bucket table over md5-HALF keys, all
-        # PRIMITIVE (the joined structure re-materializes per corpus
-        # row, and primitive arrays copy at memcpy speed): _pre/_cnt
-        # are per-bucket start/count int vectors (the bitset-style
-        # dense trick, absent buckets 0), _hh interleaves each hot
-        # line's two md5-half longs sorted by bucket
-        nb = max(64, 1 << (max(int(n_hot), 1) // 2).bit_length())
-
-        def _md5_half(c, lo):
-            return F.conv(F.substring(F.md5(c), lo, 15), 16, 10) \
-                    .cast("long")
-
-        hot2 = hot.select(
-            F.pmod(_md5_half(F.col("_norm"), 1), F.lit(nb)).alias("_b"),
-            _md5_half(F.col("_norm"), 1).alias("_h1"),
-            _md5_half(F.col("_norm"), 17).alias("_h2"))
-        cnts = (hot2.groupBy("_b")
-                .agg(F.count(F.lit(1)).cast("int").alias("_c")))
-        # the exclusive prefix-sum bucket starts compute BLOCKED
-        # two-level (r15, VERDICT r14 #1: the old build's single
-        # Window.orderBy over the range(nb) join was partition-less —
-        # bounded by design, nb <= 2*cap, but it tripped bench.py's
-        # own _assert_windows_partitioned guard): the within-block
-        # running sum is a PARTITIONED window (<= 256 blocks of <= 256
-        # buckets, whole-stage codegen), and only the <= 256 block
-        # starts are scanned with an in-row F.aggregate.  Rejected
-        # alternatives, both measured: a one-row concat-scan over all
-        # nb buckets (~4 us per interpreted higher-order-function step
-        # -> ~20 s at nb=65536) and a map_from_entries dense build
-        # (Spark map element_at scans keys linearly -> O(nb^2), 300 s
-        # at nb=65536).
-        from pyspark.sql import Window
-
-        def _excl_scan(arr, init):
-            # exclusive prefix-sum of an int-array column; callers keep
-            # `arr` block-count-sized — the concat accumulate is
-            # quadratic and interpreted
-            return F.aggregate(
-                arr,
-                F.struct(F.array().cast("array<int>").alias("a"),
-                         init.cast("int").alias("s")),
-                lambda acc, c: F.struct(
-                    F.concat(acc["a"], F.array(acc["s"])).alias("a"),
-                    (acc["s"] + c).cast("int").alias("s")),
-                lambda acc: acc["a"])
-
-        blk = max(64, nb // 256)      # power of two; nblk = nb/blk <= 256
-        sh = blk.bit_length() - 1
-        nblk = nb // blk
-        wblk = Window.partitionBy("_blk").orderBy("_b") \
-                     .rowsBetween(Window.unboundedPreceding, -1)
-        dense = (docs.sparkSession.range(nb)
-                 .withColumnRenamed("id", "_b")
-                 .join(cnts, "_b", "left")
-                 .select("_b", F.coalesce("_c", F.lit(0).cast("int"))
-                         .alias("_c"),
-                         F.shiftright(F.col("_b"), sh).alias("_blk"))
-                 .withColumn("_ws", F.coalesce(F.sum("_c").over(wblk),
-                                               F.lit(0)).cast("int")))
-        # block starts from the SPARSE per-block sums of cnts (not from
-        # `dense`, which would evaluate its window subtree a second
-        # time): gaps fill through a <=256-entry map — the linear map
-        # scan that is O(nb^2)-fatal at bucket granularity is trivial
-        # at block granularity (<=256x256 steps)
-        bstart = (cnts.groupBy(F.shiftright(F.col("_b"), sh)
-                               .alias("_blk"))
-                  .agg(F.sum("_c").cast("int").alias("_bs"))
-                  .groupBy()
-                  .agg(F.map_from_entries(F.collect_list(
-                           F.struct("_blk", "_bs"))).alias("_bm"))
-                  .select(_excl_scan(
-                      F.transform(
-                          F.sequence(F.lit(0).cast("long"),
-                                     F.lit(int(nblk - 1)).cast("long")),
-                          lambda j: F.coalesce(
-                              F.element_at(F.col("_bm"), j),
-                              F.lit(0).cast("int"))),
-                      F.lit(0)).alias("_bst")))
-        table = (dense.crossJoin(F.broadcast(bstart))
-                 .select("_b", "_c",
-                         (F.col("_ws")
-                          + F.element_at(F.col("_bst"),
-                                         (F.col("_blk") + 1).cast("int")))
-                         .cast("int").alias("_s"))
-                 .groupBy()
-                 .agg(F.transform(F.sort_array(F.collect_list(
-                          F.struct("_b", "_s"))), lambda s: s["_s"])
-                      .alias("_pre"),
-                      F.transform(F.sort_array(F.collect_list(
-                          F.struct("_b", "_c"))), lambda s: s["_c"])
-                      .alias("_cnt"))
-                 .crossJoin(hot2.groupBy().agg(
-                     F.flatten(F.transform(
-                         F.array_sort(F.collect_list(
-                             F.struct("_b", "_h1", "_h2"))),
-                         lambda s: F.array(s["_h1"], s["_h2"])))
-                     .alias("_hh"))))
-
-        def _not_hot(s):
-            # s = struct(l, a1, a2): the md5 halves were materialized
-            # ONCE per line by the two-level transform below — lambda
-            # bodies are not common-subexpression-eliminated, so
-            # hashing inline here would re-run md5 for the bucket
-            # index and again per exists iteration (the
-            # _bloom_probe_exprs lesson, measured ~25% of a query)
-            a1, a2 = s["a1"], s["a2"]
-            bi = (F.pmod(a1, F.lit(nb)) + 1).cast("int")
-            st = F.element_at(F.col("_pre"), bi)
-            c = F.element_at(F.col("_cnt"), bi)
-            return ~F.when(c > 0, F.exists(
-                F.sequence(F.lit(0), c - 1),
-                lambda i: (F.element_at(F.col("_hh"),
-                                        (st + i) * 2 + 1) == a1)
-                & (F.element_at(F.col("_hh"),
-                                (st + i) * 2 + 2) == a2))) \
-                .otherwise(F.lit(False))
-
-        # two-level transform: md5(trim(line)) computed once per line,
-        # halves extracted from that one hash, THEN the probe
-        lstruct = F.transform(
-            F.transform(lines_arr,
-                        lambda x: F.struct(
-                            x.alias("l"),
-                            F.md5(F.trim(x)).alias("h"))),
-            lambda s: F.struct(
-                s["l"].alias("l"),
-                F.conv(F.substring(s["h"], 1, 15), 16, 10).cast("long")
-                .alias("a1"),
-                F.conv(F.substring(s["h"], 17, 15), 16, 10).cast("long")
-                .alias("a2")))
-        kept = F.transform(F.filter(lstruct, _not_hot),
-                           lambda s: s["l"])
-        return (docs.crossJoin(F.broadcast(table))
-                .withColumn("_kept", kept)
-                .select(*[c if c != text_col else
-                          F.array_join(F.col("_kept"), line_sep)
-                          .alias(text_col) for c in out_cols],
-                        n_lines.alias("n_lines"),
-                        (n_lines - F.size("_kept").cast("long"))
-                        .alias("n_removed")))
     ex = docs.select(F.col(id_col).alias("_id"),
                      F.posexplode(lines_arr).alias("_pos", "_line"))
     kept = (ex.withColumn("_norm", F.trim(F.col("_line")))
@@ -431,36 +244,14 @@ def strip_boilerplate_lines(docs: DataFrame, max_line_df: int = 64,
                     F.array_join("_klines", line_sep).alias("_ktext"),
                     F.size("_klines").cast("long").alias("_nkept")),
         id_col, "left")
+    n_lines = F.size(lines_arr).cast("long")
     nkept = F.coalesce(F.col("_nkept"), F.lit(0).cast("long"))
-    # NULL-in -> NULL-out, matching the broadcast arm (VERDICT r13
-    # "What's wrong #1"): a NULL-text doc produces no exploded lines,
-    # so the regroup misses it and the old unconditional coalesce
-    # rewrote its text to '' — the arms then disagreed on the SAME
-    # corpus depending on which side of hot_broadcast_cap the hot set
-    # landed.  n_lines/n_removed stay NULL for NULL text in both arms
-    # (size/minus propagate NULL), which the docstring now documents.
+    # a NULL-text doc explodes to no lines, so the regroup misses it:
+    # without the guard the coalesce would rewrite its text to ''
     ktext = F.when(F.col(text_col).isNotNull(),
                    F.coalesce(F.col("_ktext"), F.lit("")))
     return joined.select(
         *[c if c != text_col else ktext.alias(text_col)
-          for c in out_cols],
+          for c in docs.columns],
         n_lines.alias("n_lines"),
         (n_lines - nkept).alias("n_removed"))
-
-
-def strip_boilerplate_arm(docs: DataFrame, max_line_df: int = 64,
-                          text_col: str = "text",
-                          line_sep: str = "\n",
-                          hot_broadcast_cap: int = 10_000) -> str:
-    """The :func:`strip_boilerplate_lines` dispatch decision (same
-    planner count), observable without building either arm —
-    ``"broadcast"`` or ``"antijoin"``."""
-    import re as _re
-    pat = _re.escape(line_sep)
-    norm_arr = F.array_distinct(
-        F.transform(F.split(F.col(text_col), pat, -1),
-                    lambda x: F.trim(x)))
-    n_hot = (docs.select(F.explode(norm_arr).alias("_norm"))
-             .groupBy("_norm").agg(F.count(F.lit(1)).alias("_df"))
-             .filter(F.col("_df") > F.lit(int(max_line_df))).count())
-    return "broadcast" if n_hot <= int(hot_broadcast_cap) else "antijoin"

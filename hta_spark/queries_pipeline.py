@@ -543,7 +543,7 @@ FROM toks t LEFT JOIN o USING (doc_id)
 # ^ NULL-text parity (ADVICE r14): trim_repeated_spans is NULL-in ->
 # NULL-out, so the oracle must not coalesce a NULL-text doc to ''.
 # The corpus has no NULL text today; this closes the latent mismatch
-# the same way strip_boilerplate's arms were aligned in r14.
+# the same way strip_boilerplate_lines passes NULL text through.
 
 
 # -- line-level boilerplate strip (r13) --------------------------------------
@@ -579,19 +579,11 @@ def q_strip_boilerplate(spark, sf_dir):
 
 
 def q_strip_boilerplate_anti(spark, sf_dir):
-    """The SAME corpus and oracle through the ANTI-JOIN arm
-    (``hot_broadcast_cap=-1`` forces the posexplode + left-anti +
-    ordered-regroup path UNCONDITIONALLY): with this twin BOTH dispatch
-    arms are driver-gated against one oracle, not just equality-tested
-    against each other (r14 — the default corpus's tiny hot set always
-    lands on the broadcast arm).  -1, not 0 (ADVICE r14): the dispatch
-    is ``n_hot <= cap``, so with cap=0 an EMPTY hot set would silently
-    route back to the broadcast arm and anti-arm gate coverage would
-    vanish; no hot-set size is <= -1."""
-    from .pipeline.text import strip_boilerplate_lines
-    return strip_boilerplate_lines(_strip_docs(spark, sf_dir),
-                                   max_line_df=STRIP_MAX_DF,
-                                   hot_broadcast_cap=-1)
+    """The same corpus, call and oracle as ``q_strip_boilerplate``.
+    ``strip_boilerplate_lines`` has one arm, the posexplode + left-anti
+    + ordered-regroup plan, so both entries run it; this one stays a
+    declared registry entry gated against the same oracle."""
+    return q_strip_boilerplate(spark, sf_dir)
 
 
 SQL_STRIP_BOILERPLATE = f"""

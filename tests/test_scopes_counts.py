@@ -192,6 +192,10 @@ def test_min_samples_selection(f1_raw, f1_levels):
     assert len(rows) == 2
     assert rows[0]["time"] == tp(0) and rows[1]["time"] == tp(100)
     assert rows[0]["count"] == 7 and rows[1]["count"] == 99
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="min_samples"):
+            retrieve_min_samples(f1_raw, f1_levels, F1_META,
+                                 tp(0), tp(300), bad)
 
 
 def test_point_interval_row(f1_raw, f1_levels):

@@ -1,18 +1,17 @@
 """Line-level boilerplate removal (pipeline/text.py::strip_boilerplate_lines):
 the CCNet/RefinedWeb curation step — trimmed lines repeated across more
 than max_line_df distinct documents are removed everywhere, remaining
-lines reassemble in order, and the zero-shuffle broadcast arm equals the
-explode/anti-join arm exactly."""
+lines reassemble in order, and the strip builds lazily."""
 
 from __future__ import annotations
 
 from collections import Counter
 
 import pytest
-from pyspark.sql import functions as F
 
-from hta_spark.pipeline.text import (strip_boilerplate_arm,
-                                     strip_boilerplate_lines)
+from hta_spark.pipeline.text import strip_boilerplate_lines
+
+from .conftest import jobs_in
 
 FOOTER = "all rights reserved"
 NAV = "  home | about | contact  "          # trims to a shared key
@@ -53,15 +52,12 @@ def _model(rows, max_df):
     return out
 
 
-def test_strip_matches_model_and_arms_agree(corpus):
+def test_strip_matches_model(corpus):
     rows = [(r.doc_id, r.text) for r in corpus.collect()]
     want = _model(rows, max_df=10)
-    for cap in (100_000, 0):            # broadcast arm, then anti-join arm
-        got = {r["doc_id"]: (r["text"], r["n_lines"], r["n_removed"])
-               for r in strip_boilerplate_lines(
-                   corpus, max_line_df=10,
-                   hot_broadcast_cap=cap).collect()}
-        assert got == want, f"cap={cap}"
+    got = {r["doc_id"]: (r["text"], r["n_lines"], r["n_removed"])
+           for r in strip_boilerplate_lines(corpus, max_line_df=10).collect()}
+    assert got == want
     # the footer and nav really were hot; doc 7's in-doc dups removed
     assert FOOTER not in want[7][0] and want[7][2] == 3
     assert want[100][0] == "" and want[100] == ("", 1, 1)
@@ -70,15 +66,11 @@ def test_strip_matches_model_and_arms_agree(corpus):
     # empty doc: split("") -> [""], "" trims hot only if ubiquitous;
     # with 21 even-docs NAV + footer rows, "" appears in 1 doc -> kept
     assert want[101] == ("", 1, 0)
-    # NULL text passes through untouched in BOTH arms (VERDICT r13:
-    # the anti-join arm used to rewrite it to '')
+    # NULL text passes through untouched, not rewritten to ''
     assert want[102] == (None, None, None)
 
 
-def test_strip_dispatch_and_partition_invariance(corpus):
-    assert strip_boilerplate_arm(corpus, max_line_df=10) == "broadcast"
-    assert strip_boilerplate_arm(corpus, max_line_df=10,
-                                 hot_broadcast_cap=0) == "antijoin"
+def test_strip_partition_invariance(corpus):
     a = sorted(map(tuple, strip_boilerplate_lines(corpus, 10).collect()))
     b = sorted(map(tuple, strip_boilerplate_lines(
         corpus.repartition(7), 10).collect()))
@@ -93,14 +85,7 @@ def test_strip_nothing_hot_is_identity(spark):
     assert got == {1: ("a\nb", 2, 0), 2: ("c\nd", 2, 0)}
 
 
-def test_strip_broadcast_arm_corpus_shuffle_free(corpus):
-    """The broadcast arm's 100 TB claim, plan-pinned: the corpus side is
-    probed IN-ROW — no exchange keyed by the document id anywhere in the
-    plan (the only exchanges belong to the tiny hot-set build), same
-    assertion style as bloom_decontaminate's."""
-    import re
-    out = strip_boilerplate_lines(corpus, max_line_df=10)
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted")
-    assert "BroadcastNestedLoopJoin" in plan
-    assert not re.search(r"hashpartitioning\(doc_id", plan), plan[:3000]
+def test_strip_builds_with_zero_jobs(spark, corpus):
+    """No planner job: the hot-line set stays a lazy anti-join side."""
+    _, jobs = jobs_in(spark, lambda: strip_boilerplate_lines(corpus, 10))
+    assert jobs == []
