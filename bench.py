@@ -876,7 +876,7 @@ def _se_incremental_neardup(spark, corpus_n: int = 1_000_000,
     from pyspark.sql import functions as F
     from hta_spark.pipeline.dedup import (dedup_against_neardup,
                                           lsh_band_buckets,
-                                          minhash_signatures_maponly)
+                                          minhash_signatures)
     from hta_spark.streaming.dedup_stream import (neardup_bloom_filter,
                                                   neardup_index_bitset)
 
@@ -899,7 +899,7 @@ def _se_incremental_neardup(spark, corpus_n: int = 1_000_000,
     tmp = tempfile.mkdtemp(prefix="neardup_idx_")
     try:
         t0 = time.perf_counter()
-        lsh_band_buckets(minhash_signatures_maponly(corpus)) \
+        lsh_band_buckets(minhash_signatures(corpus)) \
             .write.mode("overwrite").parquet(tmp)
         build_sec = round(time.perf_counter() - t0, 3)
         idx = spark.read.parquet(tmp)

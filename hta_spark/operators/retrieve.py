@@ -100,9 +100,11 @@ def smooth_raw(points: DataFrame, begin: int, end: int, interval: int,
                exact: bool = False) -> DataFrame:
     """``convert_timevalues_smooth`` (/root/reference/src/metric.cpp:259-311):
     re-bin scoped raw points into synthetic intervals anchored at ``begin``
-    with LAST-semantics weighting.  Vectorized via the same segment-split
-    transform as the level build (origin=begin, clipped at end, pre-begin
-    overhang folded into bucket 0)."""
+    with LAST-semantics weighting.  Runs the level build's own segment
+    explode (:func:`~.rollup.segment_pieces`, one ``sequence`` per point)
+    with ``origin=begin``, segments clipped at ``end`` and the pre-begin
+    overhang folded into bucket 0; points at or after ``end`` are never
+    consumed, and ``begin == end`` yields no rows."""
     pieces = segment_pieces(lagged(points), interval, origin=begin,
                             clip_begin=begin, clip_end=end)
     agg = _merge_pieces(pieces, interval, origin=begin, exact=exact)

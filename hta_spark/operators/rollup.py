@@ -204,32 +204,36 @@ def segment_pieces(
 
     Returns columns: ``metric, k (bucket index), value, cnt (0/1), dur (ns)``.
 
+    One explode serves both callers: the point's bucket ``kp`` is the last
+    bucket of its segment (the segment ends AT the point), so one
+    ``sequence(k_start, kp)`` per point carries both the count piece
+    (``k == kp``, ``cnt=1``) and every overlap piece (``dur`` = the
+    segment's overlap with bucket ``k``).  A non-monotonic pair
+    (``prev >= t``) degenerates to the count piece alone.
+
     ``origin``/``clip_*`` generalize the transform: the level build uses
     ``origin=0`` and no clipping; ``retrieve_flex``'s raw smoothing
     (/root/reference/src/metric.cpp:259-311) uses ``origin=clip_begin=begin``
-    and ``clip_end=end``.  Faithful smoothing quirks reproduced here:
+    and ``clip_end=end``, with the clip bounds as column expressions.
+    Faithful smoothing quirks reproduced here:
 
     - a missing predecessor is initialized to ``begin`` (the reference's
       ``previous_tp = min(begin, first_point)``), so the first point
       back-fills to the query begin;
+    - points before ``begin`` only serve as predecessors and emit nothing;
     - a segment entering from before ``begin`` is *not* clipped: its
-      pre-begin overhang folds into bucket 0 (the reference's skip loop
-      leaves ``previous_tp`` at the last pre-begin point and the first
-      consumed point is weighted from there, metric.cpp:265-272,289);
-    - segments are clipped at ``end`` (the inner loop never consumes a point
-      ``>= current_end``; partials stop at ``min(current_begin + interval,
-      end)``, metric.cpp:286,299-306).
+      bucket index is clamped to 0 and its pre-begin overhang folds into
+      bucket 0 (the reference's skip loop leaves ``previous_tp`` at the
+      last pre-begin point and the first consumed point is weighted from
+      there, metric.cpp:265-272,289);
+    - segments are clipped at ``end``: a point at or after ``end`` has no
+      count piece, and its segment's pieces stop at the bucket of
+      ``end - 1`` (the inner loop never consumes a point ``>= current_end``;
+      partials stop at ``min(current_begin + interval, end)``,
+      metric.cpp:286,299-306) — an empty clipped segment emits nothing.
     """
     t = F.col("time")
-    v = F.col("value")
     prev = F.col("prev_time")
-    if clip_begin is not None:
-        # reference: previous_tp starts at min(begin, first point time)
-        prev = F.coalesce(prev, F.least(F.lit(clip_begin), t))
-
-    seg_begin = prev
-    seg_end = t if clip_end is None else F.least(t, F.lit(clip_end))
-
     o = F.lit(origin)
     d = F.lit(interval)
 
@@ -239,103 +243,47 @@ def segment_pieces(
         off = x - o
         return F.call_function("div", off - F.pmod(off, d), d)
 
-    if clip_begin is None and clip_end is None:
-        # Hot path (the level build): the point's bucket ``kp`` is always
-        # the last bucket of its segment's sequence (the segment ends AT
-        # the point), so one ``sequence(k_start, kp)`` covers both the
-        # count piece (k == kp) and every overlap piece — no
-        # array-of-struct assembly and ~half the exploded rows of the
-        # general two-array form.  Piece-for-piece the grouped sums are
-        # identical: the bucket that used to get a (cnt=1, dur=0) point
-        # piece plus a (cnt=0, dur=x) segment piece now gets one
-        # (cnt=1, dur=x) piece.  A contract-violating non-monotonic pair
-        # (prev >= t) degenerates to the point piece alone, exactly like
-        # the general path's seg_valid guard.
-        kp = bucket(t)
-        valid_seg = prev.isNotNull() & (prev < t)
-        rows = lagged_df.select(
-            "metric",
-            t.alias("time"),
-            v.alias("value"),
-            F.when(valid_seg, prev).alias("sb"),
-            kp.alias("kp"),
-            F.explode(F.sequence(F.when(valid_seg, bucket(prev))
-                                 .otherwise(kp), kp)).alias("k"),
-        )
-        k = F.col("k")
-        dur = F.when(F.col("sb").isNull(), F.lit(0).cast("long")).otherwise(
-            F.least(o + (k + 1) * d, F.col("time"))
-            - F.greatest(o + k * d, F.col("sb")))
-        return rows.select(
-            "metric",
-            k.alias("k"),
-            "value",
-            F.when(k == F.col("kp"), 1).otherwise(0).alias("cnt"),
-            dur.alias("dur"),
-        )
-
-    # count/sum piece: only for points inside [clip_begin, clip_end)
-    in_range = F.lit(True)
+    src = lagged_df
+    k_lo = bucket(prev)
+    lower = o + F.col("k") * d
     if clip_begin is not None:
-        in_range = in_range & (t >= F.lit(clip_begin))
+        # reference: previous_tp starts at min(begin, first point time)
+        prev = F.coalesce(prev, F.least(F.lit(clip_begin), t))
+        src = src.filter(t >= F.lit(clip_begin))
+        k_lo = F.greatest(bucket(prev), F.lit(0).cast("long"))
+        # pre-begin overhang folds into bucket 0 (matched by the clamp);
+        # without clip_begin negative-k pieces carry it instead
+        lower = F.when(F.col("k") == 0, F.least(o, F.col("sb"))
+                       ).otherwise(lower)
+    # kp: the count piece's bucket, NULL for a point at or after end
+    kp = k_hi = bucket(t)
+    se = t
     if clip_end is not None:
-        in_range = in_range & (t < F.lit(clip_end))
-    point_piece = F.when(
-        in_range,
-        F.array(F.struct(bucket(t).alias("k"), F.lit(1).alias("cnt"))),
-    ).otherwise(F.array().cast("array<struct<k:long,cnt:int>>"))
-
-    # integral pieces: one per overlapped bucket of the segment, bucket
-    # indices clamped to >= 0 when folding (pre-begin overhang -> bucket 0).
-    k_lo = bucket(seg_begin)
-    k_hi = bucket(seg_end - F.lit(1))
-    if clip_begin is not None:
-        k_lo = F.greatest(k_lo, F.lit(0).cast("long"))
-        k_hi = F.greatest(k_hi, F.lit(0).cast("long"))
-        seg_valid = seg_begin.isNotNull() & (seg_begin <= seg_end) & (
-            seg_end >= F.lit(origin)) & (t >= F.lit(clip_begin))
-    else:
-        seg_valid = seg_begin.isNotNull() & (seg_begin < seg_end)
-    # guard: never let F.sequence descend (a contract-violating duplicate
-    # timestamp on a bucket boundary would otherwise emit a [k, k-1] array
-    # whose spurious piece pollutes the previous bucket's min/max)
-    k_hi = F.greatest(k_hi, k_lo)
-    seg_pieces = F.when(
-        seg_valid,
-        F.transform(
-            F.sequence(k_lo, k_hi),
-            lambda k: F.struct(k.alias("k"), F.lit(0).alias("cnt")),
-        ),
-    ).otherwise(F.array().cast("array<struct<k:long,cnt:int>>"))
-
-    pieces = lagged_df.select(
+        se = F.least(t, F.lit(clip_end))
+        kp = F.when(t < F.lit(clip_end), kp)
+        k_hi = F.coalesce(kp, bucket(se - F.lit(1)))
+    valid_seg = prev.isNotNull() & (prev < se)
+    k_start = F.when(valid_seg, k_lo).otherwise(kp)
+    if clip_begin is not None or clip_end is not None:
+        # a clipped row may have no piece at all (no count piece and an
+        # empty segment): never let the sequence descend or start at NULL
+        src = src.filter(k_start <= k_hi)
+    rows = src.select(
         "metric",
-        t.alias("time"),
-        v.alias("value"),
-        seg_begin.alias("sb"),
-        seg_end.alias("se"),
-        F.explode(F.concat(point_piece, seg_pieces)).alias("p"),
+        "value",
+        F.when(valid_seg, prev).alias("sb"),
+        se.alias("se"),
+        kp.alias("kp"),
+        F.explode(F.sequence(k_start, k_hi)).alias("k"),
     )
-    k = F.col("p.k")
-    if clip_begin is not None:
-        # pre-begin overhang folds into bucket 0 (the smoothing quirk,
-        # metric.cpp:265-272,289) — matched by the k>=0 clamp above
-        lower = F.when(k == 0, F.least(o, F.col("sb"))).otherwise(o + k * d)
-    else:
-        # clip_end-only: negative k pieces are emitted unclamped, so
-        # bucket 0 must NOT also absorb the pre-origin overhang (it would
-        # double-count what the k<0 pieces already carry)
-        lower = o + k * d
-    dur = F.when(
-        F.col("p.cnt") == 1, F.lit(0).cast("long")
-    ).otherwise(
-        F.least(o + (k + 1) * d, F.col("se")) - F.greatest(lower, F.col("sb"))
-    )
-    return pieces.select(
+    k = F.col("k")
+    dur = F.when(F.col("sb").isNull(), F.lit(0).cast("long")).otherwise(
+        F.least(o + (k + 1) * d, F.col("se")) - F.greatest(lower, F.col("sb")))
+    return rows.select(
         "metric",
         k.alias("k"),
         "value",
-        F.col("p.cnt").alias("cnt"),
+        F.when(k == F.col("kp"), 1).otherwise(0).alias("cnt"),
         dur.alias("dur"),
     )
 

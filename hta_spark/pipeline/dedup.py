@@ -22,8 +22,7 @@ from ..compat import default_parallelism, pin, release
 
 __all__ = ["normalize_text", "tokens_col", "shingles_col", "md5_long",
            "exact_dedup", "prefix_dedup", "minhash_signatures",
-           "minhash_signature_exprs", "minhash_signatures_maponly",
-           "lsh_pairs",
+           "minhash_signature_exprs", "lsh_pairs",
            "lsh_band_buckets", "dedup_against_neardup", "source_overlap",
            "ngram_jaccard_pairs", "simhash", "simhash_pairs"]
 
@@ -319,24 +318,6 @@ def minhash_signature_exprs(shingles: Column, k: int = 8) -> list[Column]:
             shingles, slot_hash(1 if s % 2 == 0 else 17, f"{s // 2}|")))
         .alias(f"mh_{s}")
         for s in range(k)]
-
-
-def minhash_signatures_maponly(docs: DataFrame, text_col: str = "text",
-                               id_col: str = "doc_id", k: int = 8,
-                               shingle_n: int = 3) -> DataFrame:
-    """:func:`minhash_signatures` with ZERO shuffle: per-row
-    :func:`minhash_signature_exprs` folds (bit-identical signatures,
-    equivalence-tested) — docs with fewer than ``shingle_n`` tokens emit
-    no row, matching the exploded form.  The right choice when the
-    signature pass feeds a map-side consumer (banding, the Bloom probe):
-    it trades ~2× the md5 work per shingle for not shuffling the whole
-    corpus through a groupBy; works on streaming frames."""
-    return (docs
-            .select(F.col(id_col), tokens_col(F.col(text_col)).alias("_t"))
-            .select(F.col(id_col),
-                    shingles_from_tokens(F.col("_t"), shingle_n).alias("_s"))
-            .filter(F.size("_s") > 0)
-            .select(F.col(id_col), *minhash_signature_exprs(F.col("_s"), k)))
 
 
 def lsh_pairs(signatures: DataFrame, id_col: str = "doc_id", k: int = 8,

@@ -206,7 +206,9 @@ def strip_boilerplate_lines(docs: DataFrame, max_line_df: int = 64,
 
     ``id_col`` must be unique per row and non-NULL: the kept lines
     regroup on it and join back to ``docs`` on it, so rows sharing an
-    id mix their lines and a NULL-id row comes back with empty text.
+    id mix their lines, and a NULL id with non-NULL text fails the
+    action that runs the strip (an executor-side error naming
+    ``id_col``).
 
     Scale shape — one lazy plan, no planner job: the line df is
     counted over the per-document-DISTINCT line stream
@@ -231,8 +233,13 @@ def strip_boilerplate_lines(docs: DataFrame, max_line_df: int = 64,
            .agg(F.count(F.lit(1)).alias("_df"))
            .filter(F.col("_df") > F.lit(int(max_line_df)))
            .select("_norm"))
-    ex = docs.select(F.col(id_col).alias("_id"),
-                     F.posexplode(lines_arr).alias("_pos", "_line"))
+    # a NULL id would regroup with nothing and come back as text='':
+    # fail the task instead, naming the column
+    ex = docs.select(
+        F.coalesce(F.col(id_col), F.raise_error(F.lit(
+            f"strip_boilerplate_lines: NULL {id_col!r}; the id column "
+            "must be unique and non-NULL"))).alias("_id"),
+        F.posexplode(lines_arr).alias("_pos", "_line"))
     kept = (ex.withColumn("_norm", F.trim(F.col("_line")))
             .join(hot, "_norm", "left_anti")
             .groupBy("_id")

@@ -49,9 +49,12 @@ __all__ = ["HtaStore", "Metric", "resolve_table_path", "publish_version",
            "publish_partitions", "publish_partition_tables",
            "read_partition_manifest", "read_level_table",
            "read_raw_table", "as_raw", "list_versions",
-           "resolve_table_version", "PublishLockError"]
+           "resolve_table_version", "partition_columns", "with_day",
+           "PublishLockError"]
 
 RAW_COLUMNS = [f.name for f in RAW_SCHEMA.fields]
+#: nanoseconds per UTC day, the raw table's ``day`` partition width
+DAY_NS = 86_400_000_000_000
 LEVEL_COLUMNS = [f.name for f in AGG_SCHEMA.fields]
 
 
@@ -69,6 +72,30 @@ def resolve_table_path(path: str) -> str:
             doc = json.load(f)
         return os.path.join(os.path.dirname(path), doc["current"])
     return path
+
+
+def partition_columns(path: str) -> list[str]:
+    """The partition columns of the live table at ``path``, outermost
+    first, read off its directory names (``metric=…/day=…``).  A writer
+    that appends to or rewrites the table partitions by these: Spark
+    reads a table in one layout only, and ignores data files at the root
+    beside ``metric=`` directories."""
+    parts, d = [], resolve_table_path(path)
+    while os.path.isdir(d):
+        sub = sorted(e for e in os.listdir(d)
+                     if "=" in e and os.path.isdir(os.path.join(d, e)))
+        if not sub:
+            break
+        parts.append(sub[0].split("=", 1)[0])
+        d = os.path.join(d, sub[0])
+    return parts
+
+
+def with_day(df: DataFrame) -> DataFrame:
+    """``df`` with the raw table's ``day`` partition column: the UTC day
+    of the ns ``time`` (``time div 86400e9``)."""
+    return df.withColumn("day", F.call_function(
+        "div", F.col("time"), F.lit(DAY_NS)))
 
 
 def table_exists(path: str) -> bool:
@@ -634,7 +661,7 @@ class HtaStore:
         need arbitrarily distant neighbour points).  Day = time div 86400e9."""
         if "day" not in raw.columns:
             return raw
-        d = 86_400_000_000_000
+        d = DAY_NS
         cond = None
         if begin is not None:
             c = F.col("day") >= F.lit(begin // d)
@@ -677,8 +704,7 @@ class HtaStore:
         if self.partition_by_metric:
             parts.append("metric")
         if self.partition_time_days:
-            w = w.withColumn("day", F.call_function(
-                "div", F.col("time"), F.lit(86_400_000_000_000)))
+            w = with_day(w)
             parts.append("day")
         w = w.sortWithinPartitions("metric", "time")
         writer = w.write.mode(mode)
@@ -721,17 +747,11 @@ class HtaStore:
         df = self.spark.read.schema(
             RAW_SCHEMA if table == "raw" else AGG_SCHEMA).parquet(live)
         sort_cols = ["metric", "time" if table == "raw" else "interval_start"]
-        # preserve the existing partition layout exactly — a rewrite that
-        # drops (or adds) partition columns leaves a mixed directory the
-        # next writer makes unreadable.  A "tb" column marks the streaming
-        # level layout (always partitioned by metric AND time bucket —
-        # the ingest job's dynamic partition overwrites depend on it).
-        if "tb" in df.columns:
-            parts = ["metric", "tb"]
-        else:
-            parts = [c for c in ("metric", "day") if c in df.columns
-                     and ((c == "metric" and self.partition_by_metric)
-                          or (c == "day" and self.partition_time_days))]
+        # preserve the existing partition layout exactly, whatever this
+        # store's flags say — a rewrite that drops (or adds) partition
+        # columns leaves a mixed directory the next writer makes
+        # unreadable
+        parts = partition_columns(path)
 
         def _write(target: str) -> None:
             writer = (df.repartition(max(target_partitions, 1), "metric")

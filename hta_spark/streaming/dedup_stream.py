@@ -153,9 +153,10 @@ def neardup_bloom_filter(docs: DataFrame, index_bits: DataFrame,
         kk = BLOOM_K if bloom_k is None else int(bloom_k)
     m = 1 << ml
     cols = docs.columns
-    # inline (not minhash_signatures_maponly): the shingle-less rows must
+    # the per-row signature exprs, not the grouped minhash_signatures:
+    # the fold is stateless on a stream, and the shingle-less rows must
     # stay IN the frame here — they pass the filter with zero keys —
-    # while the signature helpers drop them to match the exploded form
+    # while minhash_signatures drops them
     base = (docs
             .withColumn("_t", tokens_col(F.col(text_col)))
             .withColumn("_s", shingles_from_tokens(F.col("_t"), shingle_n)))

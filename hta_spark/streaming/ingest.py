@@ -170,7 +170,8 @@ class IncrementalRollup:
         # reject up front so bogus rows can neither reach raw nor be chosen
         # as a predecessor anchor for segment integrals.  Cast to the
         # declared raw types: the store reads raw with that schema
-        from ..sources.store import as_raw, resolve_table_path
+        from ..sources.store import (as_raw, partition_columns,
+                                     resolve_table_path, with_day)
         batch = as_raw(batch).filter(F.col("time") > 0)
         # the metrics/time-range this batch *attempts* are the repair scope,
         # even when every point is a duplicate (crash replay: a previous
@@ -233,7 +234,15 @@ class IncrementalRollup:
         empty = batch.isEmpty()
         if not empty:
             raw_path = resolve_table_path(f"{self.base}/raw")
-            batch.write.mode("append").parquet(raw_path)
+            # append in the live table's layout: flat files beside a
+            # store's metric= directories would be invisible to readers
+            parts = partition_columns(raw_path)
+            if "day" in parts:
+                batch = with_day(batch)
+            writer = batch.write.mode("append")
+            if parts:
+                writer = writer.partitionBy(*parts)
+            writer.parquet(raw_path)
             # invalidate the session's cached file listing for the path —
             # otherwise the post-append read may still see the old file set
             self.spark.catalog.refreshByPath(raw_path)
@@ -247,9 +256,8 @@ class IncrementalRollup:
         """Compact the streaming-appended raw table (atomic republish via
         the store's versioned manifest); resets the auto-trigger counter."""
         from ..sources.store import HtaStore
-        store = HtaStore(self.spark, self.base, partition_by_metric=False,
-                         partition_time_days=False)
-        n = store.compact("raw", target_partitions=target_partitions)
+        n = HtaStore(self.spark, self.base).compact(
+            "raw", target_partitions=target_partitions)
         self._batches_since_compact = 0
         return n
 

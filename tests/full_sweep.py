@@ -9,9 +9,11 @@ Writes one JSON file {sf, total, ok, failed: [...], per_query: {...}} and
 prints one line per query; exit 1 on any mismatch.  The optional third
 argument restricts the sweep to a comma-separated query-name list (fast
 re-verification of touched operators; the committed artifact is always a
-FULL sweep).
+FULL sweep).  The session takes ``SPARK_GRAFT_CPUS`` cores and a
+``SPARK_GRAFT_DRIVER_MEM`` heap, as ``hta_spark.session.get_spark`` does.
 """
 import json
+import os
 import struct
 import sys
 import time
@@ -34,11 +36,13 @@ def key(v):
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    spark = (SparkSession.builder.master(f"local[{cpus}]")
+             .config("spark.sql.shuffle.partitions", str(cpus))
              .config("spark.sql.legacy.parquet.nanosAsLong", "true")
              .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.driver.memory", "48g")
+             .config("spark.driver.memory",
+                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()

@@ -174,15 +174,31 @@ def _spec_smooth(points, begin, end, interval):
     return rows
 
 
-@pytest.mark.parametrize("b_s,e_s,iv_s", [
-    (100, 110, 2), (95, 125, 7), (0, 50, 13), (11, 225, 30), (150, 260, 25),
+#: unscoped input with a point exactly on ``end`` and a point after it:
+#: the follower is never consumed, so it must not reach the last
+#: bucket's min/max; with ``begin == end`` there is no bucket at all
+_POINT_ON_END = [(5, 1.0), (22, 2.0), (25, 3.0), (30, 99.0)]
+
+
+@pytest.mark.parametrize("b_s,e_s,iv_s,unscoped", [
+    *(pytest.param(b, e, iv, None, id=f"{b}-{e}-{iv}") for b, e, iv in [
+        (100, 110, 2), (95, 125, 7), (0, 50, 13), (11, 225, 30),
+        (150, 260, 25)]),
+    pytest.param(0, 25, 10, _POINT_ON_END, id="point-on-end"),
+    pytest.param(25, 25, 10, _POINT_ON_END, id="empty-range"),
 ])
-def test_smooth_raw_matches_spec(spark, f1_raw, b_s, e_s, iv_s):
+def test_smooth_raw_matches_spec(spark, f1_raw, b_s, e_s, iv_s, unscoped):
     from hta_spark.operators import filter_raw, IntervalScope, Scope
     b, e, iv = tp(b_s), tp(e_s), iv_s * SECOND
-    scoped = filter_raw(f1_raw, b, e, IntervalScope(Scope.extended, Scope.open))
-    got = {r["time"]: r for r in smooth_raw(scoped, b, e, iv).collect()}
-    pts = sorted((r["time"], r["value"]) for r in scoped.collect())
+    if unscoped is None:
+        points = filter_raw(f1_raw, b, e,
+                            IntervalScope(Scope.extended, Scope.open))
+    else:
+        points = spark.createDataFrame(
+            [("m", tp(s), v) for s, v in unscoped],
+            "metric string, time long, value double")
+    got = {r["time"]: r for r in smooth_raw(points, b, e, iv).collect()}
+    pts = sorted((r["time"], r["value"]) for r in points.collect())
     expected = _spec_smooth(pts, b, e, iv)
     assert len(got) == len(expected), (sorted(got), expected)
     for (t, mn, mx, sm, cnt, integral, active) in expected:

@@ -329,3 +329,18 @@ def test_count_walk_window_free_exact_one_window(spark, f1_raw):
     assert walk["Window"] == 0 and walk["Generate"] == 0, walk
     exact = _executed_nodes(aggregate_exact(f1_raw, tp(11), tp(225)))
     assert exact["Window"] == 1, exact
+
+
+def test_smooth_raw_runs_one_sequence_explode(spark, f1_raw):
+    """Raw smoothing runs the level build's segment explode: one
+    ``explode(sequence(...))`` per point, no array-of-struct pieces
+    assembled by a ``transform`` lambda, in the executed plan."""
+    from hta_spark.operators import smooth_raw
+    from .conftest import tp
+
+    df = smooth_raw(f1_raw, tp(95), tp(125), 7 * SECOND)
+    df.collect()
+    plan = (df._jdf.queryExecution().executedPlan().toString()
+            .split("== Initial Plan ==")[0])
+    assert "lambdafunction" not in plan, plan
+    assert len(re.findall(r"Generate explode\(sequence\(", plan)) == 1, plan

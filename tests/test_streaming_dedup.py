@@ -237,7 +237,7 @@ def test_neardup_bloom_restart_resumes_exactly(spark, tmp_path):
     import time as _time
 
     from hta_spark.pipeline.dedup import (lsh_band_buckets,
-                                          minhash_signatures_maponly)
+                                          minhash_signatures)
     from hta_spark.streaming.dedup_stream import (neardup_bloom_filter,
                                                   neardup_index_bitset)
 
@@ -256,7 +256,7 @@ def test_neardup_bloom_restart_resumes_exactly(spark, tmp_path):
          .otherwise(text_of(F.col("id"), 100)).alias("text"))
 
     bits = neardup_index_bitset(
-        lsh_band_buckets(minhash_signatures_maponly(corpus))).cache()
+        lsh_band_buckets(minhash_signatures(corpus))).cache()
     bits.count()
 
     src = tmp_path / "crawl_src"

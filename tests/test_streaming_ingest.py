@@ -598,3 +598,42 @@ def test_auto_compact_policy_bounds_small_files(spark, tmp_path):
     continuous = build_levels(_as_df(spark, pts), F1_META)
     for iv in F1_META.level_intervals():
         assert _level_dict(ing.level(iv)) == _level_dict(continuous[iv]), iv
+
+
+@pytest.mark.parametrize("by_metric,by_day", [
+    (True, False), (False, True), (True, True), (False, False)])
+def test_ingest_and_compact_keep_store_raw_layout(spark, tmp_path,
+                                                  by_metric, by_day):
+    """Ingest and compact_raw on an HtaStore-written base append and
+    rewrite in the store's raw layout (metric= / day= directories):
+    a flat file beside the partition directories is invisible to every
+    reader, so the ingested batch, and after a flat compaction the
+    whole history, used to vanish from store.raw()."""
+    from hta_spark.sources import HtaStore
+
+    day = 86_400_000_000_000
+    # two metrics on either side of a day boundary
+    pts = sorted(f1_points() + [("bar", t + day // 2, -v)
+                                for _m, t, v in f1_points()],
+                 key=lambda p: p[1])
+    cut = len(pts) // 2
+    base = str(tmp_path / "layout")
+    store = HtaStore(spark, base, configs={"foo": F1_META, "bar": F1_META},
+                     partition_by_metric=by_metric,
+                     partition_time_days=by_day)
+    store.write_raw(_as_df(spark, pts[:cut]))
+    store.build()
+    ing = IncrementalRollup(spark, base, F1_META)
+    ing.ingest(_as_df(spark, pts[cut:]))
+    assert store.raw().count() == len(pts)
+    continuous = build_levels(_as_df(spark, pts), F1_META)
+    for iv in F1_META.level_intervals():
+        assert _level_dict(ing.level(iv)) == _level_dict(continuous[iv]), iv
+
+    ing.compact_raw()
+    late = [("bar", pts[-1][1] + i * SECOND, float(i)) for i in range(1, 4)]
+    store.write_raw(_as_df(spark, late))
+    spark.catalog.refreshByPath(f"{base}/raw")
+    got = sorted((r["metric"], r["time"], r["value"])
+                 for r in store.raw().collect())
+    assert got == sorted(pts + late)

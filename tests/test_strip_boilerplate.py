@@ -89,3 +89,13 @@ def test_strip_builds_with_zero_jobs(spark, corpus):
     """No planner job: the hot-line set stays a lazy anti-join side."""
     _, jobs = jobs_in(spark, lambda: strip_boilerplate_lines(corpus, 10))
     assert jobs == []
+
+
+def test_strip_null_id_fails_loudly(spark):
+    """A NULL id with text fails the action, naming the column, instead
+    of coming back as empty text with every line counted removed."""
+    rows = [(i, f"{FOOTER}\nline {i}") for i in range(5)]
+    rows.append((None, f"{FOOTER}\nline x"))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    with pytest.raises(Exception, match="NULL 'doc_id'"):
+        strip_boilerplate_lines(docs, 2).collect()
