@@ -411,8 +411,7 @@ def build_levels_counts(raw: DataFrame, meta: Meta,
     levels above run :func:`build_levels`' own cascade, whose
     :func:`build_next_level` merges only the fields its child carries.
 
-    ``pin_level1`` (default on — the counts twin of ``build_levels``'
-    ``cache_level1``): eagerly materializes the level-1 count frame
+    ``pin_level1`` (default on): eagerly materializes the level-1 count frame
     (~raw/30 rows) so a consumer whose one action unions several level
     branches (the telescoped count walk) reads it once instead of every
     branch re-deriving the level-1 aggregate from raw — racing branches
@@ -498,23 +497,28 @@ def materialize_levels(levels: dict[int, DataFrame]) -> None:
 
 
 def build_levels(raw: DataFrame, meta: Meta,
-                 cache_level1: bool = True,
                  salt_chunks: int | str | None = "auto") -> dict[int, DataFrame]:
     """Build the whole hierarchy: dict interval_ns -> agg DataFrame.
 
-    Levels cascade (each built from the previous), so materializing level 1
-    (cache or a parquet write by the caller) avoids re-scanning raw for every
-    level.  ``salt_chunks="auto"`` (default) measures per-metric skew once
-    and salts the level-1 window only when a dominant metric needs it.
+    Levels cascade (each built from the previous) and stay lazy: no
+    Dataset is cached.  One action over several levels (a union) shares
+    the level-1 shuffle but re-runs the lag window and the segment
+    explode per level branch; callers that run one action per level
+    should :func:`materialize_levels` first.  ``salt_chunks="auto"``
+    (default) measures per-metric skew once and salts the level-1 window
+    only when a dominant metric needs it.
     """
+    lvl, ranges = _level1(raw, meta, salt_chunks)
+    return _cascade(lvl, meta, ranges)
+
+
+def _level1(raw: DataFrame, meta: Meta,
+            salt_chunks: int | str | None) -> tuple[DataFrame, DataFrame]:
+    """:func:`build_levels`' level 1, and the per-metric ranges frame its
+    cascade closes buckets on."""
     if salt_chunks == "auto":
         salt_chunks, ranges = plan_build(raw)
     else:
         ranges = raw_range(raw)
-    intervals = meta.level_intervals()
-    if not intervals:
-        return {}
-    lvl = build_level1(raw, intervals[0], ranges, salt_chunks=salt_chunks)
-    if cache_level1 and len(intervals) > 1:
-        lvl = lvl.cache()
-    return _cascade(lvl, meta, ranges)
+    return build_level1(raw, meta.level_intervals()[0], ranges,
+                        salt_chunks=salt_chunks), ranges

@@ -9,9 +9,22 @@ endianness and stats travel with the files, and positional index arithmetic
 becomes predicate pushdown on ``time``/``interval_start``.
 
 Layout:
-    <base>/meta.json                 per-metric Meta + prefix rules
-    <base>/raw/                      parquet, partitioned by metric
-    <base>/levels/<interval_ns>/     parquet rollups, partitioned by metric
+    <base>/meta.json     per-metric Meta + prefix rules
+    <base>/raw/          parquet, partitioned by metric (and UTC day)
+    <base>/levels        ONE parquet table holding every rollup level,
+                         partitioned by ``interval`` and below it by
+                         ``metric`` (store builds) or ``metric``, ``tb``
+                         (the streaming layout, see streaming/ingest.py)
+
+Consistency: every level of a store sits behind one durability barrier,
+as a metric's level files do in the reference (``Metric::flush()``,
+reference src/metric.cpp:605-609).  ``HtaStore.build`` writes all
+levels in one job and flips them with one :func:`publish_version`; an
+ingest batch publishes its region of all levels with one
+:func:`publish_partitions`.  A reader therefore sees every level as of
+the same build or batch, never level 1 of one and level 2 of another.
+The per-level tables of earlier releases (``levels/<interval_ns>/``)
+fail loudly on read; a full ``HtaStore.build()`` rewrites them.
 
 Scale notes: ``partitionBy("metric")`` gives per-metric file pruning (the
 analog of one directory per metric in the reference).  For millions of
@@ -25,37 +38,44 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import threading
 import time
-from contextlib import ExitStack, contextmanager
+from contextlib import contextmanager
 from dataclasses import asdict
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..errors import InvalidTimestampError, MissingMetricConfigError
+from ..compat import pin, release
+from ..errors import (HtaError, InvalidTimestampError,
+                      MissingMetricConfigError)
 from ..meta import Meta
 from ..operators.aggregate import (aggregate_auto, aggregate_exact,
                                    aggregate_telescope)
 from ..operators.retrieve import (retrieve_flex, retrieve_min_samples,
                                   retrieve_raw, retrieve_rows)
-from ..operators.rollup import build_levels, raw_range
+from ..operators.rollup import _cascade, _level1, raw_range
 from ..operators.scopes import (RAW_DEFAULT, ROW_DEFAULT, IntervalScope)
 from ..operators.stats import count_scoped
 from ..schemas import AGG_SCHEMA, RAW_SCHEMA
 
 __all__ = ["HtaStore", "Metric", "resolve_table_path", "publish_version",
-           "publish_partitions", "publish_partition_tables",
-           "read_partition_manifest", "read_level_table",
-           "read_raw_table", "as_raw", "list_versions",
-           "resolve_table_version", "partition_columns", "with_day",
-           "PublishLockError"]
+           "publish_partitions", "read_partition_manifest", "read_levels",
+           "level_of", "stack_levels", "read_raw_table", "append_raw",
+           "as_raw", "list_versions", "resolve_table_version",
+           "partition_columns", "with_day", "PublishLockError"]
 
 RAW_COLUMNS = [f.name for f in RAW_SCHEMA.fields]
 #: nanoseconds per UTC day, the raw table's ``day`` partition width
 DAY_NS = 86_400_000_000_000
 LEVEL_COLUMNS = [f.name for f in AGG_SCHEMA.fields]
+#: the levels table: the aggregate row plus its level's ``interval`` (ns),
+#: the outermost partition column
+LEVELS_SCHEMA = T.StructType(
+    [*AGG_SCHEMA.fields, T.StructField("interval", T.LongType(), False)])
 
 
 def resolve_table_path(path: str) -> str:
@@ -289,7 +309,6 @@ def publish_version(path: str, write_fn, keep: int = 2,
     without it, two racing publishers would allocate the same version
     number and the losing flip's rows would silently vanish.
     """
-    import shutil
     with _writer_lease(path, timeout_s=lock_timeout_s) as lease:
         vroot = path + ".versions"
         os.makedirs(vroot, exist_ok=True)
@@ -325,13 +344,13 @@ def _pm_path(path: str) -> str:
 
 
 def read_partition_manifest(path: str) -> dict | None:
-    """The partition manifest of a streaming-maintained level table, or
-    None when the table doesn't use the partition-manifest layout.
+    """The partition manifest of a streaming-maintained table, or None
+    when the table doesn't use the partition-manifest layout.
 
     Shape: ``{"v": n, "top": top_interval_ns,
-    "partitions": {"metric=<m>/tb=<b>": version_int}}`` — each key is a
-    partition's directory fragment, each value the version whose
-    ``v=<version>`` subdirectory holds that partition's live files."""
+    "partitions": {"interval=<ns>/metric=<m>/tb=<b>": version_int}}`` —
+    each key is a partition's directory fragment, each value the version
+    whose ``v=<version>`` subdirectory holds that partition's live files."""
     mp = _pm_path(path)
     if not os.path.exists(mp):
         return None
@@ -349,15 +368,17 @@ def _write_partition_manifest(path: str, doc: dict) -> None:
 def publish_partitions(spark: SparkSession, path: str, region: DataFrame,
                        top: int, replace_all: bool = False,
                        lock_timeout_s: float = 60.0) -> list[str]:
-    """Atomic multi-partition publish for a streaming-maintained level
-    table — the per-batch analog of :func:`publish_version`.
+    """Atomic multi-partition publish for a streaming-maintained table —
+    the per-batch analog of :func:`publish_version`.
 
-    The table layout is ``<path>/metric=<m>/tb=<b>/v=<n>/part-*.parquet``
+    The table is partitioned by whichever of ``interval``, ``metric`` and
+    ``tb`` ``region`` carries, in that order; the levels table carries all
+    three: ``<path>/interval=<ns>/metric=<m>/tb=<b>/v=<n>/part-*.parquet``
     plus ``_part_manifest.json`` mapping every live partition to its
-    version.  A publish (one micro-batch's open-region rewrite):
+    version.  A publish (one micro-batch's open-region rewrite of every
+    level):
 
-    1. writes ``region`` (columns: metric, tb, interval_start, aggregate
-       fields) to a staging dir, partitioned by (metric, tb);
+    1. writes ``region`` to ``<path>/_stage``, partitioned as above;
     2. renames each staged partition into place as a brand-new immutable
        ``v=<n>`` subdirectory — live files are never modified;
     3. flips the manifest with one POSIX rename.
@@ -370,7 +391,7 @@ def publish_partitions(spark: SparkSession, path: str, region: DataFrame,
     intact; the idempotent replay overwrites the orphaned staging/version
     dirs of the failed attempt.
 
-    ``replace_all=True`` (compaction/rebuild) makes the staged partition
+    ``replace_all=True`` (compaction/adoption) makes the staged partition
     set the complete new table: manifest keys not re-staged are dropped
     and their directories removed.
 
@@ -385,62 +406,31 @@ def publish_partitions(spark: SparkSession, path: str, region: DataFrame,
     :class:`PublishLockError` on contention).
 
     Returns the partition keys written."""
-    return publish_partition_tables(
-        spark, {path: region}, os.path.join(path, "_stage"), top,
-        replace_all, lock_timeout_s)[path]
-
-
-def publish_partition_tables(spark: SparkSession,
-                             regions: dict[str, DataFrame], stage: str,
-                             top: int, replace_all: bool = False,
-                             lock_timeout_s: float = 60.0
-                             ) -> dict[str, list[str]]:
-    """:func:`publish_partitions` for several tables with ONE staged write.
-
-    ``regions`` maps table paths, in lease order, to their regions.  Every
-    table's writer lease is taken in that order and held to the end; the
-    union of the regions is written once under ``stage`` (mode
-    overwrite), partitioned by ``(_iv = position in regions, metric,
-    tb)``; then each table flips in order (:func:`_flip_partitions`).  A
-    reader sees each table's pre- or post-publish state.  ``stage`` is
-    single-writer as long as every publisher into it holds one of these
-    tables' leases.  Returns each table's partition keys written."""
-    import shutil
-    with ExitStack() as held:
-        leases = []
-        for path in regions:
-            os.makedirs(path, exist_ok=True)
-            leases.append(held.enter_context(
-                _writer_lease(path, timeout_s=lock_timeout_s)))
-        (reduce(DataFrame.unionByName,
-                [r.withColumn("_iv", F.lit(i))
-                 for i, r in enumerate(regions.values())])
-         .write.mode("overwrite").partitionBy("_iv", "metric", "tb")
-         .parquet(stage))
-        out = {path: _flip_partitions(path, os.path.join(stage, f"_iv={i}"),
-                                      top, replace_all, lease)
-               for i, (path, lease) in enumerate(zip(regions, leases))}
+    parts = [c for c in ("interval", "metric", "tb") if c in region.columns]
+    stage = os.path.join(path, "_stage")
+    os.makedirs(path, exist_ok=True)
+    with _writer_lease(path, timeout_s=lock_timeout_s) as lease:
+        region.write.mode("overwrite").partitionBy(*parts).parquet(stage)
+        keys = _flip_partitions(path, stage, len(parts), top, replace_all,
+                                lease)
         shutil.rmtree(stage, ignore_errors=True)
-        return out
+        return keys
 
 
-def _flip_partitions(path: str, staged: str, top: int, replace_all: bool,
-                     lease: _Lease) -> list[str]:
-    """Publish one table's staged ``metric=*/tb=*`` dirs (under the held
-    ``lease``): rename each into place as ``v=<n>``, flip the manifest,
-    GC all but the new and the previous version of each touched
+def _flip_partitions(path: str, staged: str, depth: int, top: int,
+                     replace_all: bool, lease: _Lease) -> list[str]:
+    """Publish the staged partition dirs, ``depth`` levels deep (under the
+    held ``lease``): rename each into place as ``v=<n>``, flip the
+    manifest, GC all but the new and the previous version of each touched
     partition."""
-    import shutil
     doc = read_partition_manifest(path) or {"v": 0, "top": top,
                                             "partitions": {}}
     ver = doc["v"] + 1
-    new_parts: list[str] = []
-    for mdir in os.listdir(staged) if os.path.isdir(staged) else []:
-        if not mdir.startswith("metric="):
-            continue
-        for tdir in os.listdir(os.path.join(staged, mdir)):
-            if tdir.startswith("tb="):
-                new_parts.append(f"{mdir}/{tdir}")
+    dirs = [staged] if os.path.isdir(staged) else []
+    for _ in range(depth):
+        dirs = [os.path.join(d, e) for d in dirs for e in sorted(os.listdir(d))
+                if "=" in e]
+    new_parts = [os.path.relpath(d, staged) for d in dirs]
     for key in new_parts:
         dest = os.path.join(path, key, f"v={ver}")
         os.makedirs(os.path.dirname(dest), exist_ok=True)
@@ -474,50 +464,22 @@ def _flip_partitions(path: str, staged: str, top: int, replace_all: bool,
 
 def _adopt_into_partition_manifest(spark: SparkSession, path: str,
                                    top: int) -> None:
-    """One-time migration of a legacy level table (plain dir or versioned
-    whole-table manifest) into the partition-manifest layout, so streaming
-    upserts and readers see a single layout.  O(table) once, at the first
-    streaming write against a store-built table; NOT reader-atomic (open
-    the store for streaming before serving readers)."""
-    import shutil
-    legacy = resolve_table_path(path)
-    if not os.path.isdir(legacy):
+    """One-time migration of a store-built (whole-table versioned) levels
+    table into the partition-manifest layout, so streaming upserts and
+    readers see a single layout.  O(table) once, at the first streaming
+    write against a store-built table.  The partitions are published
+    before the versioned manifest is removed, and readers prefer that
+    manifest, so a racing reader sees the store-built snapshot until the
+    removal and the same rows in the new layout after it; a crash in
+    between adopts again at the next batch."""
+    if not os.path.exists(path + ".manifest"):
+        _refuse_per_level(path)
         return
-    # declared schema: a directory holding no data files (e.g. only the
-    # staging orphan of a crashed first publish) reads as an empty table
-    df = spark.read.schema(AGG_SCHEMA).parquet(legacy)
-    if "tb" not in df.columns:
-        df = df.withColumn("tb", F.call_function(
-            "div", F.col("interval_start"), F.lit(top)))
-    df = df.select("metric", "tb", *LEVEL_COLUMNS[1:])
-    # materialize before the legacy files are deleted out from under the
-    # plan.  Deliberately NOT compat.pin (SCALE.md Connect table): the
-    # persist fallback would be invalidated by the same-path publish's
-    # refreshByPath and re-read files this function is about to delete;
-    # only a true lineage cut is safe here (migration is a local-admin
-    # op, gated accordingly).
-    df = df.localCheckpoint(eager=True)
-    if legacy == path:                       # plain in-place legacy table
-        for entry in os.listdir(path):
-            p = os.path.join(path, entry)
-            shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) \
-                else os.remove(p)
-    else:                                    # whole-table versioned layout
-        shutil.rmtree(path + ".versions", ignore_errors=True)
-        os.remove(path + ".manifest")
-    publish_partitions(spark, path, df, top)
-
-
-def clear_partition_manifest(path: str) -> None:
-    """Remove a partition-manifest layout (used by whole-table rebuilds
-    that republish through :func:`publish_version` instead)."""
-    import shutil
-    if read_partition_manifest(path) is None:
-        return
-    os.remove(_pm_path(path))
-    for entry in os.listdir(path) if os.path.isdir(path) else []:
-        if entry.startswith(("metric=", "_stage")):
-            shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
+    df = read_levels(spark, path).withColumn("tb", F.call_function(
+        "div", F.col("interval_start"), F.lit(top)))
+    publish_partitions(spark, path, df, top, replace_all=True)
+    os.remove(path + ".manifest")
+    shutil.rmtree(path + ".versions", ignore_errors=True)
 
 
 def read_raw_table(spark: SparkSession, path: str,
@@ -534,24 +496,77 @@ def read_raw_table(spark: SparkSession, path: str,
     return df.select(*RAW_COLUMNS, *(["day"] if "day" in df.columns else []))
 
 
-def read_level_table(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a level table in ANY of its layouts (partition-manifest,
-    whole-table-versioned, plain) with the declared ``AGG_SCHEMA``.  An
-    existing table with no data files reads as an empty frame; returns
-    None when no table exists."""
-    doc = read_partition_manifest(path)
-    reader = spark.read.schema(AGG_SCHEMA)
-    if doc is not None:
-        dirs = [os.path.join(path, key, f"v={v}")
-                for key, v in doc["partitions"].items()]
-        if not dirs:
-            return spark.createDataFrame([], AGG_SCHEMA)
-        df = reader.option("basePath", path).parquet(*dirs)
-    elif table_exists(path):
+def append_raw(spark: SparkSession, path: str, df: DataFrame,
+               new_parts: list[str], mode: str = "append") -> None:
+    """Write raw rows to the raw table at ``path`` in the live table's
+    layout.  Whenever the table exists its partition columns are read off
+    its directories (:func:`partition_columns`): Spark reads a table in
+    one layout only, so rows written in another would hide, or be hidden
+    by, the rest.  ``new_parts`` (``metric``, ``day``) shapes a new table
+    only.  Writes land in the live snapshot (file-level rename-atomic);
+    the session's cached file listing of the path is refreshed after."""
+    live = resolve_table_path(path)
+    parts = partition_columns(path) if table_exists(path) else new_parts
+    if "day" in parts:
+        df = with_day(df)
+    writer = df.write.mode(mode)
+    if parts:
+        writer = writer.partitionBy(*parts)
+    writer.parquet(live)
+    spark.catalog.refreshByPath(live)
+
+
+def _refuse_per_level(path: str) -> None:
+    """Raise on the per-level tables that earlier releases kept under
+    ``levels/`` (``<interval_ns>/``, ``<interval_ns>.manifest``).  Read as
+    one table they would look like a store without levels, and a read
+    without levels silently answers from raw, or with nothing."""
+    if os.path.isdir(path) and any(e.split(".")[0].isdigit()
+                                   for e in os.listdir(path)):
+        raise HtaError(
+            f"{path} holds one table per rollup level, the layout of an "
+            "earlier release; run HtaStore.build() to rewrite it as one "
+            "levels table")
+
+
+def read_levels(spark: SparkSession, path: str) -> DataFrame | None:
+    """Read the levels table at ``path`` (``<base>/levels``) with the
+    declared ``LEVELS_SCHEMA``, in either layout: the whole-table
+    versioned snapshot of ``HtaStore.build`` (preferred when both exist,
+    see :func:`_adopt_into_partition_manifest`) or the partition manifest
+    of ``IncrementalRollup``.  One read serves every level: filtering on
+    ``interval`` (:func:`level_of`) prunes to that level's directories.
+    A table without data files reads as an empty frame; returns None when
+    no table exists."""
+    reader = spark.read.schema(LEVELS_SCHEMA)
+    if os.path.exists(path + ".manifest"):
         df = reader.parquet(resolve_table_path(path))
     else:
-        return None
-    return df.select(*LEVEL_COLUMNS)
+        _refuse_per_level(path)
+        doc = read_partition_manifest(path)
+        if doc is None and not os.path.isdir(path):
+            return None
+        # no manifest yet (a first publish that crashed before its flip):
+        # nothing under the directory is committed
+        live = doc["partitions"] if doc else {}
+        dirs = [os.path.join(path, key, f"v={v}") for key, v in live.items()]
+        if not dirs:
+            return spark.createDataFrame([], LEVELS_SCHEMA)
+        df = reader.option("basePath", path).parquet(*dirs)
+    return df.select("interval", *LEVEL_COLUMNS)
+
+
+def level_of(levels: DataFrame, interval: int) -> DataFrame:
+    """One level of a levels-table frame, in the aggregate schema."""
+    return levels.filter(F.col("interval") == interval).select(*LEVEL_COLUMNS)
+
+
+def stack_levels(levels: dict[int, DataFrame]) -> DataFrame:
+    """A :func:`build_levels` dict as rows of the levels table: every
+    level's rows tagged with its ``interval``, in one frame."""
+    return reduce(DataFrame.unionByName, [
+        df.select(*LEVEL_COLUMNS, F.lit(iv).cast("long").alias("interval"))
+        for iv, df in levels.items()])
 
 
 def as_raw(df: DataFrame) -> DataFrame:
@@ -628,17 +643,17 @@ class HtaStore:
 
         With a metric-partitioned raw table the partition directories ARE
         the catalog (the analog of the reference's one-dir-per-metric
-        layout): an O(#metrics) filesystem listing, no data scan.  Falls
-        back to a distinct scan for unpartitioned layouts."""
+        layout): an O(#metrics) filesystem listing, no data scan, whatever
+        this store's ``partition_by_metric`` flag says.  Falls back to a
+        distinct scan for unpartitioned layouts."""
         path = resolve_table_path(f"{self.base}/raw")
         if not os.path.isdir(path):
             return []
-        if self.partition_by_metric:
-            from urllib.parse import unquote
-            names = {unquote(d.split("=", 1)[1]) for d in os.listdir(path)
-                     if d.startswith("metric=")}
-            if names:
-                return sorted(names)
+        from urllib.parse import unquote
+        names = {unquote(d.split("=", 1)[1]) for d in os.listdir(path)
+                 if d.startswith("metric=")}
+        if names:
+            return sorted(names)
         raw = self.raw()
         if raw is None:
             return []
@@ -672,17 +687,18 @@ class HtaStore:
         return raw.filter(cond) if cond is not None else raw
 
     def level(self, interval: int) -> DataFrame | None:
-        # resolves every layout: partition-manifest (streaming-maintained),
-        # whole-table versioned, plain — normalized to the canonical schema
-        return read_level_table(self.spark, f"{self.base}/levels/{interval}")
+        """One rollup level, in the aggregate schema; None when the store
+        has no levels table."""
+        levels = read_levels(self.spark, f"{self.base}/levels")
+        return None if levels is None else level_of(levels, interval)
 
     def levels_for(self, meta: Meta) -> dict[int, DataFrame]:
-        out = {}
-        for iv in meta.level_intervals():
-            df = self.level(iv)
-            if df is not None:
-                out[iv] = df
-        return out
+        """``meta``'s levels, each filtered from one read of the levels
+        table; empty when the store has none."""
+        levels = read_levels(self.spark, f"{self.base}/levels")
+        if levels is None:
+            return {}
+        return {iv: level_of(levels, iv) for iv in meta.level_intervals()}
 
     def write_raw(self, df: DataFrame, mode: str = "append",
                   validate: bool = True) -> None:
@@ -690,7 +706,9 @@ class HtaStore:
         guards (t != 0, src/metric.cpp:513-518) batch-wide; strict
         monotonicity across appends is the ingest job's contract (see
         streaming.ingest for the stateful enforcement).  Columns are cast
-        to ``RAW_SCHEMA``'s types (see :func:`as_raw`)."""
+        to ``RAW_SCHEMA``'s types (see :func:`as_raw`).  An existing table
+        keeps its layout (:func:`append_raw`); ``partition_by_metric`` and
+        ``partition_time_days`` shape a new one."""
         w = as_raw(df)
         if validate:
             # NULL must be caught explicitly: NULL <= 0 is NULL, which the
@@ -700,82 +718,80 @@ class HtaStore:
             if bad.limit(1).count() > 0:
                 raise InvalidTimestampError(
                     "cannot insert invalid (NULL or <= 0) time")
-        parts = []
-        if self.partition_by_metric:
-            parts.append("metric")
-        if self.partition_time_days:
-            w = with_day(w)
-            parts.append("day")
-        w = w.sortWithinPartitions("metric", "time")
-        writer = w.write.mode(mode)
-        if parts:
-            writer = writer.partitionBy(*parts)
-        # appends resolve to the live snapshot (file-level rename-atomic);
-        # only table REWRITES need the versioned publish path
-        writer.parquet(resolve_table_path(f"{self.base}/raw"))
+        parts = (["metric"] if self.partition_by_metric else []) + \
+            (["day"] if self.partition_time_days else [])
+        append_raw(self.spark, f"{self.base}/raw",
+                   w.sortWithinPartitions("metric", "time"), parts, mode)
 
     def compact(self, table: str = "raw", target_partitions: int = 1) -> int:
-        """Small-file compaction for streaming-appended tables: rewrite the
-        table coalesced and re-sorted by (metric, time).  Streaming ingest
-        appends a few files per micro-batch; at scale those small files
-        dominate scan planning cost — periodic compaction restores
-        row-group-stat pruning efficiency.  Returns the file count after.
+        """Small-file compaction for streaming-appended tables: rewrite
+        ``table`` (``"raw"``, or ``"levels"`` for every level at once)
+        coalesced and re-sorted.  Streaming ingest appends a few files per
+        micro-batch; at scale those small files dominate scan planning
+        cost — periodic compaction restores row-group-stat pruning
+        efficiency.  The rewrite keeps the table's layout and publishes
+        atomically: a partition-manifest table through
+        :func:`publish_partitions`, any other through
+        :func:`publish_version`.  Returns the file count after.
 
         (A Delta OPTIMIZE/Z-ORDER drops in here when the jars are present.)
         """
-        path = (f"{self.base}/raw" if table == "raw"
-                else f"{self.base}/levels/{table}")
-        pm = None if table == "raw" else read_partition_manifest(path)
-        if pm is not None:
-            # partition-manifest layout: consolidate every partition into
-            # one fresh version and flip the manifest (replace_all drops
-            # the superseded keys/dirs) — readers never see a half state
-            df = read_level_table(self.spark, path)
-            region = (df.repartition(max(target_partitions, 1), "metric")
-                      .sortWithinPartitions("metric", "interval_start")
-                      .withColumn("tb", F.call_function(
-                          "div", F.col("interval_start"),
-                          F.lit(int(pm["top"])))))
-            publish_partitions(self.spark, path, region, int(pm["top"]),
-                               replace_all=True)
-            self.spark.catalog.refreshByPath(path)
-            return sum(1 for _r, _d, files in os.walk(path)
-                       for f in files if f.endswith(".parquet"))
-        if not table_exists(path):
+        if table not in ("raw", "levels"):
+            raise ValueError(
+                f"compact() takes 'raw' or 'levels', not {table!r}")
+        path = f"{self.base}/{table}"
+        if table == "raw":
+            df, order = read_raw_table(self.spark, path), ["metric", "time"]
+        else:
+            df = read_levels(self.spark, path)
+            order = ["interval", "metric", "interval_start"]
+        if df is None:
             return 0
-        live = resolve_table_path(path)
-        df = self.spark.read.schema(
-            RAW_SCHEMA if table == "raw" else AGG_SCHEMA).parquet(live)
-        sort_cols = ["metric", "time" if table == "raw" else "interval_start"]
-        # preserve the existing partition layout exactly, whatever this
-        # store's flags say — a rewrite that drops (or adds) partition
-        # columns leaves a mixed directory the next writer makes
-        # unreadable
-        parts = partition_columns(path)
+        df = (df.repartition(max(target_partitions, 1), "metric")
+              .sortWithinPartitions(*order))
+        pm = (read_partition_manifest(path) if table == "levels"
+              and not os.path.exists(path + ".manifest") else None)
+        if pm is not None:
+            # consolidate every partition into one fresh version and flip
+            # the manifest (replace_all drops the superseded keys/dirs)
+            top = int(pm["top"])
+            publish_partitions(self.spark, path, df.withColumn(
+                "tb", F.call_function("div", F.col("interval_start"),
+                                      F.lit(top))), top, replace_all=True)
+            live = path
+        else:
+            # preserve the existing partition layout exactly, whatever this
+            # store's flags say — a rewrite that drops (or adds) partition
+            # columns leaves a mixed directory the next writer makes
+            # unreadable
+            parts = partition_columns(path)
 
-        def _write(target: str) -> None:
-            writer = (df.repartition(max(target_partitions, 1), "metric")
-                      .sortWithinPartitions(*sort_cols)
-                      .write.mode("overwrite"))
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(target)
+            def _write(target: str) -> None:
+                writer = df.write.mode("overwrite")
+                if parts:
+                    writer = writer.partitionBy(*parts)
+                writer.parquet(target)
 
-        # atomic republish: full new snapshot, then one manifest rename —
-        # a concurrent reader sees the old or the new table, never a
-        # half-deleted directory (the round-1 in-place overwrite's race)
-        new_dir = publish_version(path, _write)
-        self.spark.catalog.refreshByPath(new_dir)
-        n = sum(1 for root, _d, files in os.walk(new_dir)
-                for f in files if f.endswith(".parquet"))
-        return n
+            # atomic republish: full new snapshot, then one manifest rename
+            # — a concurrent reader sees the old or the new table, never a
+            # half-deleted directory (the round-1 in-place overwrite's race)
+            live = publish_version(path, _write)
+        self.spark.catalog.refreshByPath(live)
+        return sum(1 for _r, _d, files in os.walk(live)
+                   for f in files if f.endswith(".parquet"))
 
     def build(self, metas: dict[str, Meta] | None = None) -> None:
-        """(Re)build all rollup levels for all metrics.
+        """(Re)build all rollup levels for all metrics; ``metas`` rebuilds
+        a subset, whose rows replace theirs while every other metric's
+        rows carry forward.
 
-        Metrics sharing identical hierarchy parameters are built together in
-        one job (one scan per distinct Meta), each level written as its own
-        parquet table.
+        Metrics sharing identical hierarchy parameters are built together
+        (one scan per distinct Meta, level 1 pinned once per group).
+        Every level of every group is written in ONE job into a new
+        snapshot of the levels table and published with one
+        :func:`publish_version` flip, so a reader sees all levels of the
+        previous build or all levels of this one.  The flip supersedes a streaming (partition-manifest) or per-level
+        layout under ``levels/``, which is removed after it.
         """
         raw = self.raw()
         if raw is None:
@@ -786,66 +802,47 @@ class HtaStore:
         for m, meta in metas.items():
             key = (meta.interval_min, meta.interval_max, meta.interval_factor)
             by_params.setdefault(key, []).append(m)
-        per_level: dict[int, list[DataFrame]] = {}
-        for (imin, imax, ifac), metrics in by_params.items():
-            meta = Meta(interval_min=imin, interval_max=imax, interval_factor=ifac)
-            members = F.broadcast(self.spark.createDataFrame(
-                [(m,) for m in metrics], "metric string"))
-            sub = raw.join(members, "metric", "left_semi")
-            for iv, df in build_levels(sub, meta).items():
-                per_level.setdefault(iv, []).append(df)
-        # subset rebuild: every level republish must CARRY FORWARD the
-        # rows of metrics not being rebuilt — publishing only the
-        # subset's aggregates would silently destroy everyone else's
-        # rollups behind the manifest flip (review r4).  Levels on disk
-        # that the subset's new ladders no longer produce still need a
-        # republish that strips the rebuilt metrics' stale rows.
-        rebuilt = F.broadcast(self.spark.createDataFrame(
-            [(m,) for m in metas], "metric string"))
-        if subset:
-            lv_dir = f"{self.base}/levels"
-            if os.path.isdir(lv_dir):
-                for name in os.listdir(lv_dir):
-                    if name.isdigit() and int(name) not in per_level:
-                        per_level[int(name)] = []
-        # one atomic republish per level table (param groups sharing an
-        # interval are unioned first) — a rebuild racing readers flips the
-        # manifest instead of overwriting in place.  Levels are written
-        # bottom-up with each level cached so every cascade step reads its
-        # materialized parent (forcing independently would re-derive all
-        # intermediate levels from level 1: O(levels^2) aggregations).
-        cached = []
-        for iv in sorted(per_level):
-            dfs = list(per_level[iv])
-            if subset:
-                existing_lvl = self.level(iv)
-                if existing_lvl is not None:
-                    dfs.append(existing_lvl
-                               .join(rebuilt, "metric", "left_anti")
-                               .select(*LEVEL_COLUMNS))
-            if not dfs:
-                continue
-            out = dfs[0].select(*LEVEL_COLUMNS)
-            for d in dfs[1:]:
-                out = out.unionByName(d.select(*LEVEL_COLUMNS))
-            for d in dfs:
-                d.cache()
-                cached.append(d)
-            out = out.sortWithinPartitions("metric", "interval_start")
-
-            def _write(target: str, _out=out) -> None:
-                writer = _out.write.mode("overwrite")
-                if self.partition_by_metric:
-                    writer = writer.partitionBy("metric")
-                writer.parquet(target)
-
-            # a rebuild replaces any streaming partition-manifest layout
-            # with the whole-table versioned one — cleared only after the
-            # publish, whose write still reads the carried-forward rows
-            publish_version(f"{self.base}/levels/{iv}", _write)
-            clear_partition_manifest(f"{self.base}/levels/{iv}")
-        for d in cached:
-            d.unpersist()
+        path = f"{self.base}/levels"
+        # subset rebuild: the republish must CARRY FORWARD the rows of
+        # metrics not being rebuilt — publishing only the subset's
+        # aggregates would silently destroy everyone else's rollups behind
+        # the flip (review r4).  The rebuilt metrics' old rows go at every
+        # interval, including ones their new ladders no longer produce.
+        # Read first: per-level tables of an earlier release raise here,
+        # before any job runs.
+        parts = []
+        existing = read_levels(self.spark, path) if subset else None
+        if existing is not None:
+            rebuilt = F.broadcast(self.spark.createDataFrame(
+                [(m,) for m in metas], "metric string"))
+            parts.append(existing.join(rebuilt, "metric", "left_anti"))
+        pins = []
+        try:
+            for (imin, imax, ifac), metrics in by_params.items():
+                meta = Meta(interval_min=imin, interval_max=imax,
+                            interval_factor=ifac)
+                members = F.broadcast(self.spark.createDataFrame(
+                    [(m,) for m in metrics], "metric string"))
+                lvl, ranges = _level1(
+                    raw.join(members, "metric", "left_semi"), meta, "auto")
+                # level 1 pinned once: the one write below re-groups it
+                # into every level instead of re-running the lag window
+                # and the segment explode per level branch
+                pins.append(pin(lvl))
+                parts.append(stack_levels(_cascade(pins[-1], meta, ranges)))
+            if not parts:
+                return
+            out = (reduce(DataFrame.unionByName, parts)
+                   .sortWithinPartitions("interval", "metric",
+                                         "interval_start"))
+            by = ["interval", "metric"] if self.partition_by_metric \
+                else ["interval"]
+            publish_version(path, lambda target: out.write.mode("overwrite")
+                            .partitionBy(*by).parquet(target))
+        finally:
+            for df in pins:
+                release(df)
+        shutil.rmtree(path, ignore_errors=True)
 
 
 class Metric:

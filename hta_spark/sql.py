@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .meta import Meta
 from .operators.rollup import build_levels
+from .sources.store import level_of, read_levels
 
 __all__ = ["register_views", "register_store"]
 
@@ -20,7 +21,10 @@ __all__ = ["register_views", "register_store"]
 def register_views(spark: SparkSession, raw: DataFrame, meta: Meta,
                    prefix: str = "hta") -> dict[str, str]:
     """Register ``<prefix>_raw`` and ``<prefix>_level_<ns>`` temp views for
-    an in-memory raw DataFrame; returns view-name map.
+    an in-memory raw DataFrame; returns view-name map.  The level views
+    are lazy: each query re-derives its level from ``raw`` (run
+    :func:`~hta_spark.operators.rollup.materialize_levels` on the
+    ``build_levels`` dict first to query cached levels).
 
     Example::
 
@@ -44,25 +48,19 @@ def register_views(spark: SparkSession, raw: DataFrame, meta: Meta,
 
 def register_store(spark: SparkSession, store, prefix: str = "hta") -> dict[str, str]:
     """Register a persisted :class:`~hta_spark.sources.store.HtaStore`'s
-    tables (raw + all materialized levels) as temp views."""
+    tables as temp views: raw, and one view per level of its metrics'
+    ladders (every metric needs a config, as for ``HtaStore.build``),
+    each filtered from one read of the levels table."""
     names = {}
     raw = store.raw()
     if raw is not None:
         raw.createOrReplaceTempView(f"{prefix}_raw")
         names["raw"] = f"{prefix}_raw"
-    import os
-    lvl_dir = f"{store.base}/levels"
-    if os.path.isdir(lvl_dir):
-        for d in sorted(os.listdir(lvl_dir)):
-            if d.endswith(".tmp"):
-                continue
-            try:
-                iv = int(d)
-            except ValueError:
-                continue
-            df = store.level(iv)
-            if df is not None:
-                nm = f"{prefix}_level_{iv}"
-                df.createOrReplaceTempView(nm)
-                names[iv] = nm
+    levels = read_levels(spark, f"{store.base}/levels")
+    if levels is not None:
+        for iv in sorted({iv for m in store.metric_names()
+                          for iv in store.meta_for(m).level_intervals()}):
+            nm = f"{prefix}_level_{iv}"
+            level_of(levels, iv).createOrReplaceTempView(nm)
+            names[iv] = nm
     return names

@@ -14,26 +14,27 @@ Spark-first mapping:
   recomputes exactly the level buckets its time-range intersects, from raw
   (plus one predecessor point per metric for the segment boundary) — the
   batch analog of ``restore_level``;
-- level tables are partitioned by ``(metric, tb)`` where ``tb`` is the
-  top-level interval index of ``interval_start``.  Because a monotonic
-  batch can only change buckets from the top level's open interval onward
-  (``rewrite_from``), and ``rewrite_from`` is top-aligned, the rewrite
-  region is an exact set of partitions — the upsert is a *dynamic partition
-  overwrite* that touches O(region) files and never reads or rewrites
-  table history (the O(table) full-rewrite this replaces was the round-1
-  scale-killer);
+- every level lives in ONE levels table (sources/store.py), partitioned
+  by ``(interval, metric, tb)`` where ``tb`` is the top-level interval
+  index of ``interval_start``.  Because a monotonic batch can only change
+  buckets from the top level's open interval onward (``rewrite_from``),
+  and ``rewrite_from`` is top-aligned, the rewrite region is an exact set
+  of partitions at every level — the upsert touches O(region) files and
+  never reads or rewrites table history (the O(table) full-rewrite this
+  replaces was the round-1 scale-killer);
 - exactly-once: bucket rewrites are deterministic versioned publishes, so
   replaying a batch after a crash converges to the same table — checkpoint
-  + idempotent sink.  Consistency: each batch's open-region rewrite goes
-  through the PARTITION MANIFEST (sources/store.py::
-  publish_partition_tables): every level's region is staged in one write,
-  fresh immutable ``v=<n>`` partition dirs land first, then one POSIX
-  rename per level flips its ``_part_manifest.json`` — a reader racing a
-  micro-batch resolves each level's pre-batch or post-batch partition set,
-  never a mid-swap mix (the reference's flush barrier + torn-tail tolerance,
-  /root/reference/src/storage/file/file.hpp:210-247, src/metric.cpp:
-  605-609).  Whole-table rewrites elsewhere use the same discipline at
-  table granularity (sources/store.py::publish_version);
+  + idempotent sink.  Consistency: each batch's open-region rewrite of
+  every level goes through the table's PARTITION MANIFEST (sources/
+  store.py::publish_partitions) under one writer lease: the region is
+  staged in one write, fresh immutable ``v=<n>`` partition dirs land
+  first, then ONE POSIX rename flips ``levels/_part_manifest.json`` — a
+  reader racing a micro-batch resolves every level's pre-batch or every
+  level's post-batch partition set, never a mid-swap mix and never level
+  1 of one batch beside level 2 of another (the reference's flush barrier
+  + torn-tail tolerance, reference src/storage/file/file.hpp:210-247,
+  src/metric.cpp:605-609).  Whole-table rewrites use the same
+  discipline at table granularity (sources/store.py::publish_version);
 - late/duplicate data: the reference rejects non-monotonic inserts outright
   (src/metric.cpp:519-524).  ``enforce_monotonic`` drops violations per
   micro-batch (documented relaxation: cross-batch enforcement uses the
@@ -68,6 +69,10 @@ from pyspark.sql import functions as F
 from ..meta import Meta
 from ..operators.rollup import build_levels
 from ..schemas import RAW_SCHEMA
+from ..sources.store import (HtaStore, _adopt_into_partition_manifest,
+                             append_raw, as_raw, level_of,
+                             publish_partitions, read_levels,
+                             read_raw_table, stack_levels)
 
 __all__ = ["IncrementalRollup", "enforce_monotonic"]
 
@@ -151,15 +156,15 @@ class IncrementalRollup:
     # reads/appends resolve through the store's manifest indirection so a
     # compacted (atomically republished) table keeps working mid-stream
     def raw(self) -> DataFrame | None:
-        from ..sources.store import read_raw_table
         return read_raw_table(self.spark, f"{self.base}/raw")
 
     def level(self, interval: int) -> DataFrame | None:
-        """Level table (any layout) normalized to the canonical schema —
-        reads resolve through the partition manifest, so a concurrent
-        micro-batch's publish is invisible until its atomic flip."""
-        from ..sources.store import read_level_table
-        return read_level_table(self.spark, f"{self.base}/levels/{interval}")
+        """One level of the levels table (either layout), in the aggregate
+        schema — reads resolve through the partition manifest, so a
+        concurrent micro-batch's publish is invisible until its atomic
+        flip."""
+        levels = read_levels(self.spark, f"{self.base}/levels")
+        return None if levels is None else level_of(levels, interval)
 
     def _top(self) -> int:
         return self.meta.level_intervals()[-1]
@@ -170,9 +175,12 @@ class IncrementalRollup:
         # reject up front so bogus rows can neither reach raw nor be chosen
         # as a predecessor anchor for segment integrals.  Cast to the
         # declared raw types: the store reads raw with that schema
-        from ..sources.store import (as_raw, partition_columns,
-                                     resolve_table_path, with_day)
         batch = as_raw(batch).filter(F.col("time") > 0)
+        # a store-built levels table joins the streaming layout before
+        # anything is written; the per-level tables of earlier releases
+        # raise here, before the raw append
+        _adopt_into_partition_manifest(self.spark, f"{self.base}/levels",
+                                       self._top())
         # the metrics/time-range this batch *attempts* are the repair scope,
         # even when every point is a duplicate (crash replay: a previous
         # run may have appended raw and died before level maintenance).  A
@@ -233,19 +241,9 @@ class IncrementalRollup:
         batch = batch.localCheckpoint(eager=True)
         empty = batch.isEmpty()
         if not empty:
-            raw_path = resolve_table_path(f"{self.base}/raw")
             # append in the live table's layout: flat files beside a
             # store's metric= directories would be invisible to readers
-            parts = partition_columns(raw_path)
-            if "day" in parts:
-                batch = with_day(batch)
-            writer = batch.write.mode("append")
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(raw_path)
-            # invalidate the session's cached file listing for the path —
-            # otherwise the post-append read may still see the old file set
-            self.spark.catalog.refreshByPath(raw_path)
+            append_raw(self.spark, f"{self.base}/raw", batch, [])
         self._update_levels(plan.select("metric", "_rb"))
         if not empty and self.compact_raw_every:
             self._batches_since_compact += 1
@@ -255,7 +253,6 @@ class IncrementalRollup:
     def compact_raw(self, target_partitions: int = 1) -> int:
         """Compact the streaming-appended raw table (atomic republish via
         the store's versioned manifest); resets the auto-trigger counter."""
-        from ..sources.store import HtaStore
         n = HtaStore(self.spark, self.base).compact(
             "raw", target_partitions=target_partitions)
         self._batches_since_compact = 0
@@ -263,7 +260,7 @@ class IncrementalRollup:
 
     def _update_levels(self, bounds: DataFrame) -> None:
         """Recompute exactly the buckets the batch can change, at every
-        level, and publish them with one staged write.
+        level, and publish them with one staged write and one flip.
 
         ``bounds`` is the broadcastable (metric, _rb) rewrite-bound frame.
         The single point before ``_rb`` is included in the recompute input so
@@ -274,20 +271,16 @@ class IncrementalRollup:
         every level, so the level-1 shuffle is reused, and no cached
         Dataset outlives the batch.
 
-        Level tables are partitioned by (metric, tb = interval_start div
-        top_interval); ``_rb`` is top-aligned, so {buckets >= _rb} is an
-        exact partition set.  store.publish_partition_tables stages every
-        level's region under ``<base>/levels/_stage`` and flips the levels'
-        partition manifests in ascending order — O(region) writes, history
-        never touched, each level atomic for a racing reader.  Monotonic
+        The levels table is partitioned by (interval, metric, tb =
+        interval_start div top_interval); ``_rb`` is top-aligned, so
+        {buckets >= _rb} is an exact partition set at every level.
+        store.publish_partitions stages the region under
+        ``<base>/levels/_stage`` and flips the table's one partition
+        manifest under one writer lease — O(region) writes, history never
+        touched, all levels atomic together for a racing reader.  Monotonic
         ingest (and the upsert policy's predecessor anchoring) guarantees
         the fresh region covers every previously-published bucket >= _rb.
-        A store-built level table is adopted into the manifest layout at
-        first contact, before the publish takes the levels' leases.
         """
-        from ..sources.store import (_adopt_into_partition_manifest,
-                                     publish_partition_tables,
-                                     read_partition_manifest, table_exists)
         # inner join restricts the scan to the batch's metrics and attaches
         # each row's rewrite bound — column comparisons, no literal
         # predicates, so planning cost is independent of the metric count
@@ -299,24 +292,16 @@ class IncrementalRollup:
         sub = (raw_b.filter(F.col("time") >= F.col("_rb"))
                .select("metric", "time", "value").unionByName(p0)
                .localCheckpoint(eager=True))
-        levels = build_levels(sub, self.meta, cache_level1=False,
-                              salt_chunks=self.salt_chunks)
+        levels = build_levels(sub, self.meta, salt_chunks=self.salt_chunks)
         top = self._top()
-        regions = {}
-        for iv, df in levels.items():
-            path = f"{self.base}/levels/{iv}"
-            if read_partition_manifest(path) is None and table_exists(path):
-                _adopt_into_partition_manifest(self.spark, path, top)
-            regions[path] = (
-                df.join(F.broadcast(bounds), "metric")
-                .filter(F.col("interval_start") >= F.col("_rb"))
-                .drop("_rb")
-                .withColumn("tb", F.call_function(
-                    "div", F.col("interval_start"), F.lit(top))))
-        publish_partition_tables(self.spark, regions,
-                                 f"{self.base}/levels/_stage", top)
-        for path in regions:
-            self.spark.catalog.refreshByPath(path)
+        region = (stack_levels(levels).join(F.broadcast(bounds), "metric")
+                  .filter(F.col("interval_start") >= F.col("_rb"))
+                  .drop("_rb")
+                  .withColumn("tb", F.call_function(
+                      "div", F.col("interval_start"), F.lit(top))))
+        path = f"{self.base}/levels"
+        publish_partitions(self.spark, path, region, top)
+        self.spark.catalog.refreshByPath(path)
 
     # -- streaming entry ---------------------------------------------------
     def stream_from(self, stream_df: DataFrame, checkpoint: str,

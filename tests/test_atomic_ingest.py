@@ -110,8 +110,7 @@ def test_store_built_levels_adopted_by_streaming(spark, tmp_path):
                      partition_by_metric=False)
     store.write_raw(_as_df(spark, pts[:half]))
     store.build()
-    assert read_partition_manifest(
-        f"{base}/levels/{10 * SECOND}") is None      # whole-table layout
+    assert read_partition_manifest(f"{base}/levels") is None  # whole-table
 
     ing = IncrementalRollup(spark, base, F1_META)
     ing.ingest(_as_df(spark, pts[half:]))
@@ -124,8 +123,7 @@ def test_store_built_levels_adopted_by_streaming(spark, tmp_path):
                r["sum"], r["count"], r["integral"], r["active_time"])
                for r in continuous[iv].collect()}
         assert got == exp, f"level {iv} after adoption"
-    assert read_partition_manifest(
-        f"{base}/levels/{10 * SECOND}") is not None  # adopted
+    assert read_partition_manifest(f"{base}/levels") is not None  # adopted
 
 
 def test_rebuild_clears_partition_manifest(spark, tmp_path):
@@ -138,7 +136,7 @@ def test_rebuild_clears_partition_manifest(spark, tmp_path):
     pts = f1_points()
     ing = IncrementalRollup(spark, base, F1_META)
     ing.ingest(_as_df(spark, pts))
-    lvl_path = f"{base}/levels/{10 * SECOND}"
+    lvl_path = f"{base}/levels"
     assert read_partition_manifest(lvl_path) is not None
 
     store = HtaStore(spark, base, configs={"foo": F1_META},

@@ -2,8 +2,8 @@
 
 ``IncrementalRollup.ingest`` cuts lineage three times (the plan frame, the
 enforced batch, the recompute input), appends raw once and stages every
-level's region in one write before flipping the levels' manifests in
-ascending order.  These tests pin the batch's Spark job count, that no
+level's region in one write before flipping the levels table's one
+partition manifest.  These tests pin the batch's Spark job count, that no
 cached Dataset outlives an ingest, and what a crash between the staged
 write and the first flip leaves behind: the pre-batch levels, and a
 ``levels/_stage`` directory every level reader skips."""
@@ -94,7 +94,7 @@ def test_crash_between_staged_write_and_flip(spark, tmp_path, monkeypatch):
     base = str(tmp_path / "s")
     ing = IncrementalRollup(spark, base, META)
     ing.ingest(_df(spark, 0, HISTORY))
-    paths = [f"{base}/levels/{iv}" for iv in META.level_intervals()]
+    paths = [f"{base}/levels"]
     manifests = [open(_pm_path(p)).read() for p in paths]
     before = _levels(ing.level)
 
@@ -128,6 +128,6 @@ def test_crash_between_staged_write_and_flip(spark, tmp_path, monkeypatch):
     assert _levels(ing.level) == _levels(continuous.get)
 
     # a subset rebuild beside a leftover staging dir keeps every metric
-    os.makedirs(f"{stage}/_iv=0/metric=m00/tb=1")
+    os.makedirs(f"{stage}/interval={META.interval_min}/metric=m00/tb=1")
     store.build({"m00": META})
     assert _levels(store.level) == _levels(continuous.get)

@@ -56,7 +56,7 @@ def _rows(df):
 def test_hierarchy_and_shape_invariants(spark, deltas):
     pts = _mk_points(deltas)
     df = spark.createDataFrame(pts, "metric string, time long, value double")
-    levels = build_levels(df, META, cache_level1=False)
+    levels = build_levels(df, META)
     t_first, t_last = pts[0][1], pts[-1][1]
 
     prev = None
@@ -96,7 +96,7 @@ def test_hierarchy_and_shape_invariants(spark, deltas):
 def test_aggregate_paths_agree(spark, deltas, b_off, span):
     pts = _mk_points(deltas)
     df = spark.createDataFrame(pts, "metric string, time long, value double")
-    levels = build_levels(df, META, cache_level1=False)
+    levels = build_levels(df, META)
     b = T0 + b_off * SECOND
     e = b + span * SECOND
     r1 = aggregate_exact(df, b, e).collect()[0]

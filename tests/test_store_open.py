@@ -44,8 +44,9 @@ def _df(spark, pts, value_type: str = "double"):
         pts, f"metric string, time long, value {value_type}")
 
 
-def _plain_level(spark, path: str):
-    """A level table read by schema inference, the live files only."""
+def _plain_level(spark, path: str, interval: int):
+    """One level of the levels table read by schema inference, the live
+    files only."""
     doc = read_partition_manifest(path)
     if doc is None:
         df = spark.read.parquet(resolve_table_path(path))
@@ -53,7 +54,7 @@ def _plain_level(spark, path: str):
         dirs = [os.path.join(path, k, f"v={v}")
                 for k, v in doc["partitions"].items()]
         df = spark.read.option("basePath", path).parquet(*dirs)
-    return df.select("metric", "interval_start", "minimum", "maximum", "sum",
+    return df.filter(df["interval"] == interval).select("metric", "interval_start", "minimum", "maximum", "sum",
                      "count", "integral", "active_time")
 
 
@@ -80,10 +81,11 @@ def _ingest_store(spark, base: str) -> HtaStore:
                          ids=["build", "ingest"])
 def test_open_runs_no_spark_job(spark, tmp_path, make):
     store = make(spark, str(tmp_path / "store"))
-    lvl0 = f"{store.base}/levels/{F1_META.interval_min}"
-    doc = read_partition_manifest(lvl0)
-    assert (len(doc["partitions"]) if doc else
-            len(glob.glob(f"{resolve_table_path(lvl0)}/metric=*"))) > 32
+    lvls, lvl0 = f"{store.base}/levels", f"interval={F1_META.interval_min}"
+    doc = read_partition_manifest(lvls)
+    assert (len([k for k in doc["partitions"] if k.startswith(lvl0 + "/")])
+            if doc else len(glob.glob(
+                f"{resolve_table_path(lvls)}/{lvl0}/metric=*"))) > 32
 
     (raw, levels), jobs = jobs_in(
         spark, lambda: (store.raw(), store.levels_for(F1_META)))
@@ -102,7 +104,7 @@ def test_open_runs_no_spark_job(spark, tmp_path, make):
     (plain_raw, plain_levels), jobs = jobs_in(spark, lambda: (
         spark.read.parquet(resolve_table_path(f"{store.base}/raw"))
         .select("metric", "time", "value"),
-        {iv: _plain_level(spark, f"{store.base}/levels/{iv}")
+        {iv: _plain_level(spark, f"{store.base}/levels", iv)
          for iv in F1_META.level_intervals()}))
     assert jobs
 
@@ -168,8 +170,8 @@ def test_int_values_write_as_declared_types(spark, tmp_path):
 
 
 def test_empty_level_and_numeric_metric_name(spark, tmp_path):
-    """A level with no closed bucket is a directory without data files;
-    the declared schema reads it as an empty table, without a job.  A
+    """A level with no closed bucket has no data files in the levels
+    table; it reads as an empty frame, without a job.  A
     metric name that looks like a number stays a string (inference read
     the ``metric=007`` directory as the integer 7)."""
     from .conftest import f1_points
@@ -177,8 +179,9 @@ def test_empty_level_and_numeric_metric_name(spark, tmp_path):
     store.write_raw(_df(spark, [("007", t, v) for _m, t, v in f1_points()]))
     store.build()                     # f1 spans < one top interval
     top = F1_META.level_intervals()[-1]
-    live = resolve_table_path(f"{store.base}/levels/{top}")
-    assert not glob.glob(f"{live}/**/*.parquet", recursive=True)
+    live = resolve_table_path(f"{store.base}/levels")
+    assert not glob.glob(f"{live}/interval={top}/**/*.parquet",
+                         recursive=True)
     df, jobs = jobs_in(spark, lambda: store.level(top))
     assert jobs == []
     assert df.columns == ["metric", "interval_start", "minimum", "maximum",

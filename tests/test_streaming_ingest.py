@@ -328,7 +328,7 @@ def test_watermarked_window_stream(spark, tmp_path):
 def _level_files(base, interval):
     """Map partition-relative dir -> sorted parquet file names."""
     import os
-    root = f"{base}/levels/{interval}"
+    root = f"{base}/levels/interval={interval}"
     out = {}
     for r, _d, fs in os.walk(root):
         pq = sorted(f for f in fs if f.endswith(".parquet"))
@@ -446,7 +446,7 @@ def test_level_compaction_preserves_streaming_layout(spark, tmp_path):
 
     store = HtaStore(spark, base, configs={"foo": F1_META},
                      partition_by_metric=False)
-    n_files = store.compact(str(10 * SECOND), target_partitions=1)
+    n_files = store.compact("levels", target_partitions=1)
     assert n_files > 0
 
     ing.ingest(_as_df(spark, pts[half:]))
