@@ -279,7 +279,7 @@ def _insert_matrix(spark) -> list[dict]:
             n = 1 << exp
             df = dummy(spark, count=n, time_delta_ns=spacing, value=None)
             t0 = time.perf_counter()
-            levels = build_levels(df, meta, salt_chunks=256)
+            levels = build_levels(df, meta)
             # 2 jobs: level 1 into cache, then the unioned higher cascade
             # (each branch re-groups the cached level 1 / tiny cached
             # intermediates — O(levels) aggregations, 1 job of overhead)
@@ -307,7 +307,7 @@ def _query_latency(spark) -> dict:
     from hta_spark.chrono import HOUR, MINUTE
 
     raw = events_raw(spark, SF_DIR)
-    levels = build_levels(raw, EVENTS_META, salt_chunks=256)
+    levels = build_levels(raw, EVENTS_META)
     materialize_levels(levels)             # materialize = stored rollups
     ranges = raw_range(raw).cache()
     lo, hi = ranges.select(F.min("t_first"), F.max("t_last")).collect()[0]

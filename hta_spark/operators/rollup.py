@@ -31,9 +31,9 @@ Scale notes:
   build cost ≈ 1.1x one raw scan (the reference's ~11% overhead figure,
   /root/reference/README.md "Planning the aggregation parameters");
 - a single giant metric makes ``Window.partitionBy(metric)`` skew; for that
-  shape use bucketed time-ranges per metric (salt on
-  ``floor(time/coarse)`` and fix up the per-salt first row, which only needs
-  the neighbouring salt's last point).  The segment explode is bounded by the
+  shape :func:`plan_build` salts the window into time chunks per metric
+  (:func:`lagged_salted`: the per-chunk first row is fixed up from the
+  previous chunk's last point).  The segment explode is bounded by the
   same dense-row count the reference itself would write.
 """
 
@@ -62,19 +62,11 @@ AUTO_SALT_TARGET_ROWS = 1_000_000
 
 
 def auto_salt_chunks(raw: DataFrame) -> int | None:
-    """Skew decision from per-metric row-count stats: returns the chunk
-    count for :func:`lagged_salted` when the largest metric's series would
-    overfill one window task (> ``AUTO_SALT_TARGET_ROWS`` rows), else None.
-
-    Cost: one map-side-combined count aggregation over the input.  When
-    the build also needs the ranges frame, use :func:`plan_build` instead
-    — it derives BOTH the decision and a literal ranges frame from one
-    collected stats pass, so the raw lineage executes once, not twice.
-    """
-    mx_row = (raw.groupBy("metric").agg(F.count(F.lit(1)).alias("n"))
-              .agg(F.max("n").alias("mx")).collect())
-    mx = mx_row[0]["mx"] if mx_row else None
-    return _chunks_for(mx, raw)
+    """Skew decision alone: the chunk count :func:`plan_build` would give
+    ``raw``'s build (None when no metric's series overfills one window
+    task of ``AUTO_SALT_TARGET_ROWS`` rows).  Runs the planner's stats
+    collect."""
+    return plan_build(raw)[0]
 
 
 def _chunks_for(mx: int | None, raw: DataFrame) -> int | None:
@@ -94,38 +86,26 @@ def _chunks_for(mx: int | None, raw: DataFrame) -> int | None:
     return int(min(256, max(need, min(4 * par, 256))))
 
 
-def raw_stats(raw: DataFrame) -> DataFrame:
-    """Per-metric (t_first, t_last, n): :func:`raw_range` plus row count —
-    the one aggregate the build planner needs."""
-    return raw.groupBy("metric").agg(
-        F.min("time").alias("t_first"), F.max("time").alias("t_last"),
-        F.count(F.lit(1)).alias("n"))
-
-
 def plan_build(raw: DataFrame) -> tuple[int | None, DataFrame]:
-    """One collected stats pass -> (salt decision, LITERAL ranges frame).
+    """The hierarchy build's one planner: one collected stats pass ->
+    (salt decision, LITERAL ranges frame).
 
-    The skew decision needs a driver-side value, so auto-salting must run
-    an action; folding min/max into the same aggregate and re-emitting the
+    The skew decision needs a driver-side value, so planning runs an
+    action; folding min/max into the same aggregate and re-emitting the
     collected rows as a literal frame means the (possibly expensive) raw
     lineage executes exactly once for all planner needs — the lazy
     ``raw_range`` broadcast subtree would re-execute it inside the build
     job.  Driver state is metric-count-sized (the repo's planner-state
     convention; 10^4-metric smoke-tested)."""
-    rows = raw_stats(raw).collect()
+    rows = raw.groupBy("metric").agg(
+        F.min("time").alias("t_first"), F.max("time").alias("t_last"),
+        F.count(F.lit(1)).alias("n")).collect()
     spark = raw.sparkSession
     schema = "metric string, t_first long, t_last long"
     ranges = spark.createDataFrame(
         [(r["metric"], r["t_first"], r["t_last"]) for r in rows], schema)
     mx = max((r["n"] for r in rows), default=0)
     return _chunks_for(mx, raw), ranges
-
-
-def _resolve_salt(raw: DataFrame,
-                  salt_chunks: int | str | None) -> int | None:
-    if salt_chunks == "auto":
-        return auto_salt_chunks(raw)
-    return salt_chunks
 
 
 def raw_range(raw: DataFrame) -> DataFrame:
@@ -364,37 +344,35 @@ def _merge_pieces(pieces: DataFrame, interval: int, origin: int = 0,
     )
 
 
-def build_level1(raw: DataFrame, interval: int,
-                 ranges: DataFrame | None = None,
-                 salt_chunks: int | str | None = "auto",
-                 exact: bool = False) -> DataFrame:
-    """Level-1 rollup (closed buckets only) from the raw table.
-
-    Equivalent to replaying ``Metric::insert`` (/root/reference/src/metric.cpp:510-560)
-    over the whole series, keeping only closed intervals.
-    ``salt_chunks``: parallelize the per-metric window via
-    :func:`lagged_salted` (needed when few metrics carry most rows).  The
-    default ``"auto"`` measures per-metric skew and salts only when a
-    metric's series would overfill one window task
-    (:func:`auto_salt_chunks`); pass an int to force, None to disable.
-    ``exact``: decimal sum/integral accumulation (see :func:`_merge_pieces`);
-    higher levels inherit the decimal type through their plain ``sum()``s.
-    """
-    if salt_chunks == "auto" and ranges is None:
-        salt_chunks, ranges = plan_build(raw)
-    else:
-        ranges = ranges if ranges is not None else raw_range(raw)
-        salt_chunks = _resolve_salt(raw, salt_chunks)
-    lg = (lagged_salted(raw, salt_chunks, ranges) if salt_chunks
-          else lagged(raw))
+def _level1(raw: DataFrame, interval: int, ranges: DataFrame,
+            chunks: int | None, exact: bool = False) -> DataFrame:
+    """The level-1 kernel every build runs: the lag window (salted into
+    ``chunks`` time slices via :func:`lagged_salted` when set), the
+    segment explode, the monoid merge and the closed-bucket filter on
+    ``ranges``."""
+    lg = lagged_salted(raw, chunks, ranges) if chunks else lagged(raw)
     pieces = segment_pieces(lg, interval)
     return _closed(_merge_pieces(pieces, interval, exact=exact), interval,
                    ranges)
 
 
-def build_levels_counts(raw: DataFrame, meta: Meta,
-                        ranges: DataFrame | None = None,
-                        pin_level1: bool = True) -> dict[int, DataFrame]:
+def build_level1(raw: DataFrame, interval: int,
+                 exact: bool = False) -> DataFrame:
+    """Level-1 rollup (closed buckets only) from the raw table.
+
+    Equivalent to replaying ``Metric::insert`` (/root/reference/src/metric.cpp:510-560)
+    over the whole series, keeping only closed intervals.
+    :func:`plan_build` decides the salt: the per-metric window is salted
+    via :func:`lagged_salted` only when a metric's series would overfill
+    one window task.
+    ``exact``: decimal sum/integral accumulation (see :func:`_merge_pieces`);
+    higher levels inherit the decimal type through their plain ``sum()``s.
+    """
+    chunks, ranges = plan_build(raw)
+    return _level1(raw, interval, ranges, chunks, exact)
+
+
+def build_levels_counts(raw: DataFrame, meta: Meta) -> dict[int, DataFrame]:
     """Counts-only cascade: dict interval_ns -> (metric, interval_start,
     count), the ``count`` projection of :func:`build_levels`' levels on
     the buckets holding a point (the full build also stores closed
@@ -411,12 +389,13 @@ def build_levels_counts(raw: DataFrame, meta: Meta,
     levels above run :func:`build_levels`' own cascade, whose
     :func:`build_next_level` merges only the fields its child carries.
 
-    ``pin_level1`` (default on): eagerly materializes the level-1 count frame
-    (~raw/30 rows) so a consumer whose one action unions several level
-    branches (the telescoped count walk) reads it once instead of every
-    branch re-deriving the level-1 aggregate from raw — racing branches
-    inside a single job do not reliably share a lazy cache."""
-    ranges = ranges if ranges is not None else raw_range(raw)
+    The level-1 count frame (~raw/30 rows) is materialized eagerly when
+    levels stack above it, so a consumer whose one action unions several
+    level branches (the telescoped count walk) reads it once instead of
+    every branch re-deriving the level-1 aggregate from raw — racing
+    branches inside a single job do not reliably share a lazy cache.
+    Ranges come from a lazy :func:`raw_range`: no planner collect."""
+    ranges = raw_range(raw)
     intervals = meta.level_intervals()
     if not intervals:
         return {}
@@ -427,7 +406,7 @@ def build_levels_counts(raw: DataFrame, meta: Meta,
                   .agg(F.count(F.lit(1)).cast("long").alias("count"))
                   .select("metric", (F.col("k") * F.lit(d))
                           .alias("interval_start"), "count"), d, ranges)
-    if pin_level1 and len(intervals) > 1:
+    if len(intervals) > 1:
         from ..compat import pin
         lvl = pin(lvl)
     return _cascade(lvl, meta, ranges)
@@ -497,28 +476,17 @@ def materialize_levels(levels: dict[int, DataFrame]) -> None:
 
 
 def build_levels(raw: DataFrame, meta: Meta,
-                 salt_chunks: int | str | None = "auto") -> dict[int, DataFrame]:
+                 exact: bool = False) -> dict[int, DataFrame]:
     """Build the whole hierarchy: dict interval_ns -> agg DataFrame.
 
-    Levels cascade (each built from the previous) and stay lazy: no
-    Dataset is cached.  One action over several levels (a union) shares
-    the level-1 shuffle but re-runs the lag window and the segment
-    explode per level branch; callers that run one action per level
-    should :func:`materialize_levels` first.  ``salt_chunks="auto"``
-    (default) measures per-metric skew once and salts the level-1 window
-    only when a dominant metric needs it.
+    One :func:`plan_build` (the salt decision and the ranges frame), the
+    level-1 kernel, then the cascade, each level built from the one
+    below.  Levels stay lazy: no Dataset is cached.  One action over
+    several levels (a union) shares the level-1 shuffle but re-runs the
+    lag window and the segment explode per level branch; callers that run
+    one action per level should :func:`materialize_levels` first.
+    ``exact``: as for :func:`build_level1`.
     """
-    lvl, ranges = _level1(raw, meta, salt_chunks)
+    chunks, ranges = plan_build(raw)
+    lvl = _level1(raw, meta.level_intervals()[0], ranges, chunks, exact)
     return _cascade(lvl, meta, ranges)
-
-
-def _level1(raw: DataFrame, meta: Meta,
-            salt_chunks: int | str | None) -> tuple[DataFrame, DataFrame]:
-    """:func:`build_levels`' level 1, and the per-metric ranges frame its
-    cascade closes buckets on."""
-    if salt_chunks == "auto":
-        salt_chunks, ranges = plan_build(raw)
-    else:
-        ranges = raw_range(raw)
-    return build_level1(raw, meta.level_intervals()[0], ranges,
-                        salt_chunks=salt_chunks), ranges

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..chrono import SECOND
 from ..compat import pin, release
 from ..meta import Meta
-from .rollup import build_levels
+from .rollup import build_levels, chunk_index
 
 __all__ = ["check_raw", "check_levels", "check_store", "repair", "throttle",
            "throttle_parallel", "clone", "dummy"]
@@ -261,14 +261,11 @@ def throttle_parallel(raw: DataFrame, cooldown_ns: int,
                        F.lit(None).cast("long").alias("u"))
     merged = data.unionByName(probe)
     if salt_chunks:
-        rngs = merged.groupBy("metric").agg(F.min("pos").alias("_a"),
-                                            F.max("pos").alias("_b"))
-        j = merged.join(F.broadcast(rngs), "metric")
-        width = F.greatest(F.call_function(
-            "div", F.col("_b") - F.col("_a"), F.lit(salt_chunks)), F.lit(1))
-        c = F.least(F.call_function("div", F.col("pos") - F.col("_a"), width),
-                    F.lit(salt_chunks - 1).cast("long"))
-        j = j.withColumn("_c", c).drop("_a", "_b")
+        rngs = merged.groupBy("metric").agg(F.min("pos").alias("t_first"),
+                                            F.max("pos").alias("t_last"))
+        j = (merged.join(F.broadcast(rngs), "metric")
+             .withColumn("_c", chunk_index(F.col("pos"), salt_chunks))
+             .drop("t_first", "t_last"))
         # suffix-min as a REVERSE-ordered prefix-min: Spark executes
         # (unboundedPreceding, -1) frames incrementally (O(rows)), while
         # (1, unboundedFollowing) frames re-scan the remaining frame for

@@ -39,7 +39,7 @@ from .chrono import HOUR, SECOND
 from .meta import Meta
 from .operators import (IntervalScope, Scope, aggregate_exact,
                         count_scoped, filter_raw, last_point, metric_range)
-from .operators.rollup import build_level1, build_next_level
+from .operators.rollup import build_level1, build_levels
 from .operators.tools import throttle
 
 # query window constants (ns, UTC) — inside the events span (2024-01)
@@ -81,7 +81,7 @@ def _ts_literal(ev: DataFrame, us: int):
     return lit if dt == "timestamp" else lit.cast(dt)
 
 
-def _dedup_max(pts: DataFrame, salt_chunks: int | None = None) -> DataFrame:
+def _dedup_max(pts: DataFrame) -> DataFrame:
     """max-value collapse of duplicate (metric, time) pairs as a WINDOW
     keeper instead of a groupBy: within metric ordered by (time, value),
     the last row of each equal-time run carries the max value.
@@ -91,28 +91,13 @@ def _dedup_max(pts: DataFrame, salt_chunks: int | None = None) -> DataFrame:
     downstream consumer (rollup lag window, scoped boundary aggs, range
     stats) partitions by anyway, so the whole events pipeline runs on ONE
     exchange where the groupBy form forced a (metric, time) shuffle plus
-    a second metric shuffle.
-
-    The window serializes per metric (the groupBy form did not);
-    ``salt_chunks`` restores cluster-width parallelism for a dominant
-    metric via time-slice salting — exact with NO boundary repair,
-    because the chunk index is a pure function of time, so an equal-time
-    run can never straddle chunks (rollup.chunk_index)."""
-    if salt_chunks:
-        from .operators.rollup import chunk_index, raw_range
-        j = pts.join(F.broadcast(raw_range(pts)), "metric")
-        j = (j.withColumn("_c", chunk_index(F.col("time"), salt_chunks))
-             .drop("t_first", "t_last"))
-        w = Window.partitionBy("metric", "_c").orderBy("time", "value")
-        drop = ["_nt", "_c"]
-    else:
-        j = pts
-        w = Window.partitionBy("metric").orderBy("time", "value")
-        drop = ["_nt"]
+    a second metric shuffle.  The window serializes per metric (the
+    groupBy form did not)."""
+    w = Window.partitionBy("metric").orderBy("time", "value")
     nxt = F.lead("time").over(w)
-    return (j.withColumn("_nt", nxt)
+    return (pts.withColumn("_nt", nxt)
             .filter(F.col("_nt").isNull() | (F.col("_nt") != F.col("time")))
-            .drop(*drop))
+            .drop("_nt"))
 
 
 def events_raw(spark: SparkSession, sf_dir: str,
@@ -270,12 +255,8 @@ def q_hta_level1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_hta_level2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.rollup import plan_build
-    raw = events_raw(spark, sf_dir)
-    chunks, ranges = plan_build(raw)
-    l1 = build_level1(raw, LEVEL1, ranges, salt_chunks=chunks, exact=True)
-    l2 = build_next_level(l1, LEVEL1, 10, ranges)
-    return _round_rollup(l2)
+    levels = build_levels(events_raw(spark, sf_dir), EVENTS_META, exact=True)
+    return _round_rollup(levels[10 * LEVEL1])
 
 
 def q_hta_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -344,10 +325,10 @@ def q_hta_aggregate_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     products exceed 2^53; its exact-integer gate is ``hta_aggregate_range``).
     Levels build in-query from the same quantized frame (EVENTS_META:
     1 h / 10 h / 100 h)."""
-    from .operators import aggregate_auto, build_levels
+    from .operators import aggregate_auto
     raw = events_raw(spark, sf_dir).withColumn(
         "value", F.round(F.col("value") * 4) / 4)
-    levels = build_levels(raw, EVENTS_META, salt_chunks=None)
+    levels = build_levels(raw, EVENTS_META)
 
     def shaped(df: DataFrame, tag: str) -> DataFrame:
         return (df.filter(F.col("active_time") > 0)
@@ -747,14 +728,10 @@ def q_hta_retrieve_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE ops over bit-identical operands, hence identical on both
     engines.  Grid rows where a metric has no closed bucket are NULL."""
     from .operators.retrieve import retrieve_aligned
-    from .operators.rollup import plan_build
-    raw = events_raw(spark, sf_dir)
-    chunks, ranges = plan_build(raw)
-    l1 = build_level1(raw, LEVEL1, ranges, salt_chunks=chunks, exact=True)
-    l2 = build_next_level(l1, LEVEL1, 10, ranges)
+    levels = build_levels(events_raw(spark, sf_dir), EVENTS_META, exact=True)
     mean_v = (_fix3(F.col("integral"), INT_PRE) / F.col("active_time")
               * F.lit(1e9))
-    return retrieve_aligned({LEVEL1: l1, ALIGN_IV: l2}, EVENTS_META,
+    return retrieve_aligned(levels, EVENTS_META,
                             AGG_BEGIN, AGG_END, ALIGN_IV,
                             metrics=ALIGN_METRICS, value=mean_v)
 

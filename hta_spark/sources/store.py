@@ -57,7 +57,7 @@ from ..operators.aggregate import (aggregate_auto, aggregate_exact,
                                    aggregate_telescope)
 from ..operators.retrieve import (retrieve_flex, retrieve_min_samples,
                                   retrieve_raw, retrieve_rows)
-from ..operators.rollup import _cascade, _level1, raw_range
+from ..operators.rollup import _cascade, _level1, plan_build, raw_range
 from ..operators.scopes import (RAW_DEFAULT, ROW_DEFAULT, IntervalScope)
 from ..operators.stats import count_scoped
 from ..schemas import AGG_SCHEMA, RAW_SCHEMA
@@ -823,8 +823,9 @@ class HtaStore:
                             interval_factor=ifac)
                 members = F.broadcast(self.spark.createDataFrame(
                     [(m,) for m in metrics], "metric string"))
-                lvl, ranges = _level1(
-                    raw.join(members, "metric", "left_semi"), meta, "auto")
+                sub = raw.join(members, "metric", "left_semi")
+                chunks, ranges = plan_build(sub)
+                lvl = _level1(sub, meta.level_intervals()[0], ranges, chunks)
                 # level 1 pinned once: the one write below re-groups it
                 # into every level instead of re-running the lag window
                 # and the segment explode per level branch

@@ -67,7 +67,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..meta import Meta
-from ..operators.rollup import build_levels
+from ..operators.rollup import _cascade, _level1, raw_range
 from ..schemas import RAW_SCHEMA
 from ..sources.store import (HtaStore, _adopt_into_partition_manifest,
                              append_raw, as_raw, level_of,
@@ -114,7 +114,6 @@ class IncrementalRollup:
 
     def __init__(self, spark: SparkSession, base: str, meta: Meta,
                  policy: str = "strict",
-                 salt_chunks: int | str | None = None,
                  compact_raw_every: int | None = None):
         """``policy``:
 
@@ -128,12 +127,11 @@ class IncrementalRollup:
           continuous-build invariant); duplicate (metric, time) keys are
           still dropped (first write wins).
 
-        ``salt_chunks``: parallelize the per-metric window of each batch's
-        level recompute via the salted path (rollup.lagged_salted) — use
-        when one metric dominates the stream.  ``"auto"`` measures the
-        recompute input's skew per batch (one extra stats job over the
-        pinned open-region input, not a re-read of raw; not the streaming
-        default).
+        The batch recompute never salts its lag window and runs no planner
+        collect: its input is the open region (from the top interval
+        holding the batch's earliest point on), not a metric's whole
+        series.  A salted backfill of a dominant metric is
+        ``HtaStore.write_raw`` + ``HtaStore.build()``.
         """
         if policy not in ("strict", "upsert"):
             raise ValueError(f"unknown policy {policy!r}")
@@ -141,7 +139,6 @@ class IncrementalRollup:
         self.base = base.rstrip("/")
         self.meta = meta
         self.policy = policy
-        self.salt_chunks = salt_chunks
         # auto-compaction policy: every N point-carrying micro-batches,
         # rewrite the raw table via the atomic whole-table republish
         # (store.compact -> publish_version).  Streaming appends a few
@@ -269,7 +266,10 @@ class IncrementalRollup:
         reading only the open tail, metric.cpp:451-497).  That input is
         pinned once and the levels derive from it uncached: one write plans
         every level, so the level-1 shuffle is reused, and no cached
-        Dataset outlives the batch.
+        Dataset outlives the batch.  Level 1 is the build's kernel run
+        unsalted over a lazy ``raw_range`` of the pinned input — no
+        planner collect for an open region — and is not pinned itself (a
+        pin there costs 6 more jobs per batch).
 
         The levels table is partitioned by (interval, metric, tb =
         interval_start div top_interval); ``_rb`` is top-aligned, so
@@ -292,7 +292,9 @@ class IncrementalRollup:
         sub = (raw_b.filter(F.col("time") >= F.col("_rb"))
                .select("metric", "time", "value").unionByName(p0)
                .localCheckpoint(eager=True))
-        levels = build_levels(sub, self.meta, salt_chunks=self.salt_chunks)
+        ranges = raw_range(sub)
+        levels = _cascade(_level1(sub, self.meta.level_intervals()[0],
+                                  ranges, None), self.meta, ranges)
         top = self._top()
         region = (stack_levels(levels).join(F.broadcast(bounds), "metric")
                   .filter(F.col("interval_start") >= F.col("_rb"))

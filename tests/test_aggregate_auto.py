@@ -30,7 +30,7 @@ def store(spark):
     meta = Meta(interval_min=10 * SECOND, interval_max=1000 * SECOND,
                 interval_factor=10)
     levels = {iv: df.cache() for iv, df in
-              build_levels(pts, meta, salt_chunks=None).items()}
+              build_levels(pts, meta).items()}
     for df in levels.values():
         df.count()
     return pts, levels, meta

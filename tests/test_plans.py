@@ -59,14 +59,6 @@ def test_rollup_exchange_budget(events_native):
     n_shuffles = len(re.findall(r"Arguments: hashpartitioning", plan))
     assert n_shuffles == 1, f"expected 1 hash exchange, got {n_shuffles}\n{plan}"
     assert "BroadcastExchange" in plan
-    # explicit ranges (the pre-planned path) keeps the same budget plus
-    # the shared ranges aggregate
-    from hta_spark.operators.rollup import raw_range
-    plan2 = _plan(build_level1(events_native, 3600 * SECOND,
-                               ranges=raw_range(events_native),
-                               salt_chunks=None))
-    n2 = len(re.findall(r"Arguments: hashpartitioning", plan2))
-    assert n2 == 2, f"expected 2 hash exchanges, got {n2}\n{plan2}"
 
 
 def test_q5_broadcasts_dimensions(spark):
@@ -147,21 +139,6 @@ def test_dedup_max_equals_groupby(spark):
                   pts.groupBy("metric", "time")
                   .agg(F.max("value").alias("value")).collect())
     assert got == want
-
-
-def test_dedup_max_salted_equals_plain(spark):
-    """Time-slice salting of the dedup window is exact without boundary
-    repair: the chunk index is a pure function of time, so equal-time
-    runs never straddle chunks."""
-    from hta_spark.queries_hta import _dedup_max
-    rows = [("m", 10 + i, float(i % 7)) for i in range(5000)]
-    rows += [("m", 10 + i, float((i % 7) + j)) for i in range(0, 5000, 17)
-             for j in (1, 2)]                      # duplicate times
-    pts = spark.createDataFrame(rows, "metric string, time long, value double") \
-        .repartition(8)
-    a = sorted(tuple(r) for r in _dedup_max(pts).collect())
-    b = sorted(tuple(r) for r in _dedup_max(pts, salt_chunks=64).collect())
-    assert a == b
 
 
 def test_events_query_single_metric_exchange(spark):
@@ -250,7 +227,7 @@ def test_flex_many_metrics_single_probe_job(spark, tmp_path):
 
 
 def test_auto_salt_triggers_on_dominant_metric(spark, monkeypatch):
-    """salt_chunks='auto' must salt the level-1 window when one metric's
+    """The build planner must salt the level-1 window when one metric's
     series exceeds the per-task target, and stay unsalted otherwise —
     with identical results either way."""
     from hta_spark.operators import rollup
@@ -260,16 +237,16 @@ def test_auto_salt_triggers_on_dominant_metric(spark, monkeypatch):
     # small threshold so the test doesn't need millions of rows
     monkeypatch.setattr(rollup, "AUTO_SALT_TARGET_ROWS", 1000)
     assert rollup.auto_salt_chunks(big) >= 4          # ceil(5000/1000)+par
-    salted = rollup.build_level1(big, 30 * 1_000_000_000)   # auto default
+    assert rollup.auto_salt_chunks(big) == rollup.plan_build(big)[0]
+    salted = rollup.build_level1(big, 30 * 1_000_000_000)
     assert "_c#" in _plan(salted), "dominant metric did not auto-salt"
-    unsalted = rollup.build_level1(big, 30 * 1_000_000_000, salt_chunks=None)
-    assert "_c#" not in _plan(unsalted)
-    assert sorted(map(tuple, salted.collect())) \
-        == sorted(map(tuple, unsalted.collect()))
 
     monkeypatch.setattr(rollup, "AUTO_SALT_TARGET_ROWS", 1_000_000)
     assert rollup.auto_salt_chunks(big) is None       # below target: no salt
-    assert "_c#" not in _plan(rollup.build_level1(big, 30 * 1_000_000_000))
+    unsalted = rollup.build_level1(big, 30 * 1_000_000_000)
+    assert "_c#" not in _plan(unsalted)
+    assert sorted(map(tuple, salted.collect())) \
+        == sorted(map(tuple, unsalted.collect()))
 
 
 def test_q3_broadcast_dim_before_fact_shuffle(spark):

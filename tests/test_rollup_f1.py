@@ -134,14 +134,47 @@ def test_salted_lag_equivalence(spark, f1_raw):
         assert a == b, f"chunks={chunks}"
 
 
-def test_salted_build_equivalence(spark, f1_raw):
+def test_salted_build_equivalence(spark, f1_raw, monkeypatch):
+    """The planner's salted build (forced by a tiny per-task target)
+    equals the unsalted one at every level."""
+    from hta_spark.operators import rollup
     from .conftest import F1_META
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
     plain = build_levels(f1_raw, F1_META)
-    salted = build_levels(f1_raw, F1_META, salt_chunks=8)
+    assert "_c#" not in plan(plain[10 * SECOND])
+    monkeypatch.setattr(rollup, "AUTO_SALT_TARGET_ROWS", 4)
+    salted = build_levels(f1_raw, F1_META)
+    assert "_c#" in plan(salted[10 * SECOND]), "build did not salt"
     for iv in F1_META.level_intervals():
         pa = {r["interval_start"]: tuple(r) for r in plain[iv].collect()}
         pb = {r["interval_start"]: tuple(r) for r in salted[iv].collect()}
         assert pa == pb, f"interval {iv}"
+
+
+def test_build_levels_exact_matches_level1_and_next_level(spark):
+    """``build_levels(exact=True)`` is ``build_level1(exact=True)`` at
+    level 1 and the hand-wired ``build_next_level`` cascade above it."""
+    from hta_spark import Meta
+    from hta_spark.operators import build_level1, build_next_level, raw_range
+    raw = spark.createDataFrame(
+        [("m%d" % (i % 3), (10_000 + 7 * i + (i * i) % 5) * SECOND,
+          float(i % 13) / 3.0 - 2.0) for i in range(3_000)],
+        "metric string, time long, value double")
+    iv, factor = 10 * SECOND, 10
+    meta = Meta(interval_min=iv, interval_max=100 * iv, interval_factor=factor)
+    levels = build_levels(raw, meta, exact=True)
+    assert sorted(levels) == [iv, iv * factor, iv * factor * factor]
+    l1 = build_level1(raw, iv, exact=True)
+    l2 = build_next_level(l1, iv, factor, raw_range(raw))
+    assert dict(levels[iv].dtypes)["integral"].startswith("decimal")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+    assert rows(levels[iv]) == rows(l1)
+    assert rows(levels[iv * factor]) == rows(l2)
+    assert len(rows(l2)) > 10
 
 
 def test_exact_mode_consistent_with_double_mode(spark, f1_raw):

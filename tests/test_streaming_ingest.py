@@ -455,20 +455,6 @@ def test_level_compaction_preserves_streaming_layout(spark, tmp_path):
         assert _level_dict(ing.level(iv)) == _level_dict(continuous[iv]), iv
 
 
-def test_salted_ingest_equals_continuous(spark, tmp_path):
-    """salt_chunks (skew-proof window) through the incremental path still
-    equals the continuous build."""
-    pts = f1_points()
-    base = str(tmp_path / "salted")
-    ing = IncrementalRollup(spark, base, F1_META, salt_chunks=8)
-    half = len(pts) // 2
-    ing.ingest(_as_df(spark, pts[:half]))
-    ing.ingest(_as_df(spark, pts[half:]))
-    continuous = build_levels(_as_df(spark, pts), F1_META)
-    for iv in F1_META.level_intervals():
-        assert _level_dict(ing.level(iv)) == _level_dict(continuous[iv]), iv
-
-
 def test_stream_levels_cascade_matches_batch(spark, tmp_path):
     """The single-stage streaming cascade (stream_levels) must emit closed
     rows at EVERY level equal to the batch hierarchy build — the streaming

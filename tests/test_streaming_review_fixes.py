@@ -54,8 +54,7 @@ def test_stream_levels_multi_chunk_out_of_order(spark, tmp_path):
            for r in spark.sql("SELECT * FROM chunked_lvl").collect()}
     pts = spark.createDataFrame(rows, "metric string, time long, value double")
     want = {r["interval_start"]: (r["count"], r["sum"], r["active_time"])
-            for r in build_level1(pts, 30 * SECOND,
-                                  salt_chunks=None).collect()}
+            for r in build_level1(pts, 30 * SECOND).collect()}
     assert got == want
     assert sum(c for c, _s, _a in got.values()) > n - 30  # nothing dropped
 
@@ -94,7 +93,7 @@ def test_ingest_mixed_replay_repairs_deduped_metric(spark, tmp_path):
     # levels must now equal a clean build over the FULL raw contents
     lvl = ing.level(10 * SECOND)
     raw = ing.raw()
-    want = build_level1(raw, 10 * SECOND, salt_chunks=None)
+    want = build_level1(raw, 10 * SECOND)
     got_rows = sorted(map(tuple, lvl.select(
         "metric", "interval_start", "count", "sum").collect()))
     want_rows = sorted(map(tuple, want.select(

@@ -23,7 +23,7 @@ def test_telescope_no_driver_collect(spark, monkeypatch):
         "metric string, time long, value double")
     meta = Meta(interval_min=10 * SECOND, interval_max=1000 * SECOND,
                 interval_factor=10)
-    levels = build_levels(pts, meta, salt_chunks=None)
+    levels = build_levels(pts, meta)
 
     def _boom(self, *a, **k):
         raise AssertionError("collect() called during telescope planning")
@@ -91,7 +91,7 @@ def test_telescope_missing_level_falls_back_to_raw(spark):
         "metric string, time long, value double")
     meta = Meta(interval_min=70 * SECOND, interval_max=7_000 * SECOND,
                 interval_factor=10)
-    levels = build_levels(pts, meta, salt_chunks=None)
+    levels = build_levels(pts, meta)
     assert len(levels) >= 2
     b, e = 2_000_100 * SECOND, 2_002_500 * SECOND
     full = sorted(map(tuple, aggregate_telescope(
@@ -132,7 +132,7 @@ def test_telescope_many_distinct_clamps(spark):
                    (F.col("k") * 1.0 + 1.0).alias("value")))
     meta = Meta(interval_min=100 * SECOND, interval_max=10_000 * SECOND,
                 interval_factor=10)
-    levels = build_levels(pts, meta, salt_chunks=None)
+    levels = build_levels(pts, meta)
     b = 1_000_500 * SECOND
     e = 1_003_500 * SECOND
     tel = aggregate_telescope(pts, levels, meta, b, e)
