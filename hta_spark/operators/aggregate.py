@@ -30,7 +30,7 @@ from ..chrono import interval_begin, interval_end
 from ..compat import default_parallelism, pin
 from ..errors import InvalidRangeError
 from ..meta import Meta
-from .rollup import _FIELDS, _IDENTITY, _merge_exprs, micro_value, raw_range
+from .rollup import _FIELDS, _IDENTITY, _merge_exprs, _piece_aggs, raw_range
 
 __all__ = ["aggregate_exact", "aggregate_telescope", "aggregate_auto",
            "AUTO_ROW_FLOOR", "AUTO_ROW_RATIO"]
@@ -77,7 +77,7 @@ def aggregate_exact(raw: DataFrame, begin: int, end: int,
     per-metric clamped ``[bm, em)`` bounds: filter (``time >= begin``
     pushed to parquet — safe because every valid metric's ``bm >= begin``)
     -> one window lag -> one grouped aggregation.  ``exact``: order-free
-    integer sum/integral in micro-value units — see rollup._merge_pieces.
+    integer sum/integral in micro-value units — see rollup._piece_aggs.
     """
     if begin >= end:
         raise InvalidRangeError(
@@ -88,52 +88,6 @@ def aggregate_exact(raw: DataFrame, begin: int, end: int,
                                          em.alias("_em"))
     return _identity_fill(ranges, _edge_aggregate_cols(
         raw, bounds, "_bm", "_em", begin, exact=exact))
-
-
-#: planner-stats cache (VERDICT r6 "What's wrong #2"): the store-version
-#: statistics behind the auto dispatch — ranges bounds, metric count and
-#: the coarsest rollup's per-bucket count histogram — are STATIC per
-#: materialized store version, so they are collected once and keyed on the
-#: IDENTITY of the (coarsest level, ranges) DataFrame objects (weakref-
-#: validated: a recycled id() cannot alias a dead entry).  A new store
-#: version arrives as new DataFrame objects -> new key -> fresh stats;
-#: repeat dispatches against the same frames plan with ZERO Spark actions
-#: (tested) instead of the ~0.5-4 s auto_plan_sec the r6 bench recorded.
-_STATS_CACHE: dict[tuple[int, int], tuple] = {}
-
-
-def _auto_plan_stats(levels: dict[int, DataFrame], meta: Meta,
-                     ranges: DataFrame) -> tuple | None:
-    """(coarse_interval, lo, hi, n_metrics, histogram) for the auto
-    planner, cached per materialized store version (see _STATS_CACHE).
-    ``histogram`` is the coarsest rollup's metric-summed bucket counts —
-    O(time_range / interval_max) rows, planner-state sized at any data
-    scale (a year of data at the 100 h default is ~90 rows)."""
-    import weakref
-    usable = [iv for iv in meta.level_intervals() if iv in levels]
-    if not usable:
-        return None
-    coarse = max(usable)
-    cdf = levels[coarse]
-    key = (id(cdf), id(ranges))
-    hit = _STATS_CACHE.get(key)
-    if hit is not None and hit[0]() is cdf and hit[1]() is ranges:
-        return hit[2]
-    got = ranges.select(F.min("t_first"), F.max("t_last"),
-                        F.count("*")).collect()[0]
-    lo, hi, n_metrics = got[0], got[1], int(got[2])
-    hist: list[tuple[int, int]] = []
-    if lo is not None:
-        hist = sorted(
-            (r["interval_start"], int(r["c"])) for r in
-            cdf.groupBy("interval_start")
-            .agg(F.sum("count").alias("c")).collect())
-    stats = (coarse, lo, hi, n_metrics, hist)
-    for k in [k for k, v in _STATS_CACHE.items()
-              if v[0]() is None or v[1]() is None]:
-        del _STATS_CACHE[k]                    # drop dead store versions
-    _STATS_CACHE[key] = (weakref.ref(cdf), weakref.ref(ranges), stats)
-    return stats
 
 
 def _auto_choice(levels: dict[int, DataFrame], meta: Meta,
@@ -158,19 +112,25 @@ def _auto_choice(levels: dict[int, DataFrame], meta: Meta,
     where levels are barely smaller than raw (sf0.1's 30-points-per-
     bucket store: reading levels is not much cheaper than raw).
 
-    r7: the store statistics come through :func:`_auto_plan_stats` —
-    first dispatch against a store version costs two small jobs, repeats
-    cost none; the [b, e) estimate itself is driver arithmetic over the
-    cached histogram with the SAME pro-rata boundary weighting the r6
-    Spark probe computed (partially-overlapped buckets contribute
-    fractionally; the unmaterialized open tail keeps the estimate a mild
-    lower bound — a planning-only error toward the cheap exact path)."""
-    stats = _auto_plan_stats(levels, meta, ranges)
-    if stats is None:
+    The store statistics cost two small collects per dispatch: the
+    global bounds and metric count of ``ranges``, and the coarsest
+    rollup's metric-summed bucket counts — O(time_range / interval_max)
+    rows, planner-state sized at any data scale (a year of data at the
+    100 h default is ~90 rows).  The [b, e) estimate is driver arithmetic
+    over that histogram: partially-overlapped buckets contribute
+    fractionally, and the unmaterialized open tail keeps the estimate a
+    mild lower bound — a planning-only error toward the cheap exact
+    path."""
+    usable = [iv for iv in meta.level_intervals() if iv in levels]
+    if not usable:
         return "exact", -1, -1
-    coarse, lo, hi, n_metrics, hist = stats
+    coarse = max(usable)
+    lo, hi, n_metrics = ranges.select(F.min("t_first"), F.max("t_last"),
+                                      F.count("*")).collect()[0]
     if lo is None:
         return "exact", 0, 0
+    hist = sorted(tuple(r) for r in levels[coarse].groupBy("interval_start")
+                  .agg(F.sum("count")).collect())
     b, e = max(begin, lo), min(end, hi)
     if b >= e:
         return "exact", 0, 0
@@ -203,35 +163,18 @@ def aggregate_auto(raw: DataFrame, levels: dict[int, DataFrame], meta: Meta,
     reads are pointer-cheap; in Spark each telescope branch is a stage,
     so small ranges are faster as one raw windowed scan (measured
     crossover: BENCH_DETAIL aggregate_crossover_16m).  This entry point
-    estimates both sides from the ROLLUPS (one O(range/interval_max)
-    probe — the raw store is never scanned for planning) and dispatches;
-    results are path-independent (equivalence-tested), so a planning miss
-    costs time, never correctness."""
+    estimates both sides from the ROLLUPS (:func:`_auto_choice`'s two
+    small collects — the raw store is never scanned for planning) and
+    dispatches; results are path-independent (equivalence-tested), so a
+    planning miss costs time, never correctness."""
     if begin >= end:
         raise InvalidRangeError(
             f"invalid request: begin timestamp {begin} >= end timestamp {end}")
-    ranges = ranges if ranges is not None else raw_range(raw)
     # both paths broadcast/reuse the bounds repeatedly; one eager
     # metric-count-sized materialization stops the planner probe and the
-    # chosen path from re-running the full-raw ranges aggregate.  Skip it
-    # when the caller already persisted the frame (cache/checkpoint) — a
-    # second copy measured ~2 s of pure planning overhead on the 16.7M
-    # bench store
-    from pyspark import StorageLevel
-    try:
-        already = (ranges.storageLevel != StorageLevel.NONE
-                   # a checkpointed frame reports StorageLevel.NONE but its
-                   # plan root is the materialized LogicalRDD — free to rerun
-                   or ranges._jdf.queryExecution().analyzed()
-                   .nodeName() in ("LogicalRDD",))
-    except Exception:
-        # the plan probe uses private JVM internals (absent under Spark
-        # Connect, unstable across versions — ADVICE r6): when unavailable,
-        # conservatively re-checkpoint; a redundant checkpoint of the tiny
-        # metric-count-sized frame costs one small job, never correctness
-        already = False
-    if not already:
-        ranges = pin(ranges)
+    # chosen path from re-running the full-raw ranges aggregate (as in
+    # stats.count_via_levels)
+    ranges = pin(ranges if ranges is not None else raw_range(raw))
     choice, _r, _t = _auto_choice(levels, meta, begin, end, ranges,
                                   int(row_floor), int(row_ratio))
     if choice == "telescope":
@@ -331,9 +274,11 @@ def _edge_aggregate_cols(raw: DataFrame, bounds: DataFrame,
     pushed filter; NULL bounds (metric not in this edge's cover) fail
     every predicate.  ``fields == ("count",)``: a count needs no
     predecessor gap and no boundary-partial carry, so the window drops to
-    a filtered map-side-combined count.  ``exact``: micro-value integer
-    sum/integral (see rollup._merge_pieces)."""
-    t, v = F.col("time"), F.col("value")
+    a filtered map-side-combined count.  Otherwise each point is one
+    ``(value, cnt, dur)`` piece — ``cnt=1`` inside ``[lo, hi)``, and the
+    end point carries the partial ``hi - prev`` — aggregated by
+    ``rollup._piece_aggs(exact)``, the level build's constructor."""
+    t = F.col("time")
     lo, hi = F.col(lo_col), F.col(hi_col)
     sub = (raw.filter(t >= F.lit(static_lo))
            .join(F.broadcast(bounds.select("metric", lo_col, hi_col)),
@@ -349,28 +294,11 @@ def _edge_aggregate_cols(raw: DataFrame, bounds: DataFrame,
     w = Window.partitionBy("metric").orderBy("time")
     prev = F.greatest(F.coalesce(F.lag("time").over(w), lo), lo)
     inside = t < hi
-    contrib = sub.select(
-        "metric",
-        v.alias("mv"),
-        F.when(inside, v).alias("sv"),
+    return sub.select(
+        "metric", "value",
         F.when(inside, F.lit(1)).otherwise(F.lit(0)).alias("cnt"),
         F.when(inside, t - prev).otherwise(hi - prev).alias("dur"),
-    )
-    mv, sv, dur = F.col("mv"), F.col("sv"), F.col("dur")
-    if exact:
-        sum_expr = F.coalesce(F.sum(micro_value(sv)), F.lit(0)).cast("long")
-        integral = F.sum(micro_value(mv).cast("decimal(38,0)") * dur)
-    else:
-        sum_expr = F.coalesce(F.sum(sv), F.lit(0.0))
-        integral = F.sum(mv * dur.cast("double"))
-    return contrib.groupBy("metric").agg(
-        F.min(mv).alias("minimum"),
-        F.max(mv).alias("maximum"),
-        sum_expr.alias("sum"),
-        F.sum("cnt").cast("long").alias("count"),
-        integral.alias("integral"),
-        F.sum(dur).cast("long").alias("active_time"),
-    )
+    ).groupBy("metric").agg(*_piece_aggs(exact))
 
 
 def aggregate_telescope(raw: DataFrame, levels: dict[int, DataFrame], meta: Meta,

@@ -301,11 +301,12 @@ def _closed(agg: DataFrame, interval: int, ranges: DataFrame) -> DataFrame:
             .drop("t_first", "t_last"))
 
 
-def _merge_pieces(pieces: DataFrame, interval: int, origin: int = 0,
-                  exact: bool = False) -> DataFrame:
-    """groupBy (metric, bucket) with the Aggregate monoid
-    (/root/reference/src/aggregate.cpp:50-59) — Spark's partial+final hash
-    aggregation IS ``Aggregate::operator+=``.
+def _piece_aggs(exact: bool = False) -> list[Column]:
+    """The Aggregate's six fields over contribution pieces ``(value, cnt,
+    dur)``: a count piece (``cnt=1``) adds its value to ``sum``, and every
+    piece holds ``value`` for ``dur`` ns (reference
+    ``src/aggregate.cpp:37-48``).  Grouped by (metric, bucket) it is the
+    level-1 build, grouped by metric the raw-exact range aggregate.
 
     ``exact=True``: order-free integer accumulation for the oracle-gated
     queries.  ``sum`` becomes BIGINT in micro-value units and ``integral``
@@ -316,32 +317,28 @@ def _merge_pieces(pieces: DataFrame, interval: int, origin: int = 0,
     convention; the double default path has no such bound and matches the
     reference's engine-internal doubles).
     """
+    v, cnt, dur = F.col("value"), F.col("cnt"), F.col("dur")
     if exact:
-        mv = micro_value(F.col("value"))
-        sum_expr = F.sum(F.when(F.col("cnt") == 1, mv)
-                         .otherwise(F.lit(0))).cast("long").alias("sum")
-        integral_expr = F.sum(
-            mv.cast("decimal(38,0)") * F.col("dur")).alias("integral")
+        mv = micro_value(v)
+        sum_expr = F.sum(F.when(cnt == 1, mv).otherwise(F.lit(0))).cast("long")
+        integral = F.sum(mv.cast("decimal(38,0)") * dur)
     else:
-        sum_expr = F.sum(F.when(F.col("cnt") == 1, F.col("value"))
-                         .otherwise(0.0)).alias("sum")
-        integral_expr = F.sum(F.col("value") * F.col("dur")).alias("integral")
-    return (
-        pieces.groupBy("metric", "k")
-        .agg(
-            F.min("value").alias("minimum"),
-            F.max("value").alias("maximum"),
-            sum_expr,
-            F.sum("cnt").cast("long").alias("count"),
-            integral_expr,
-            F.sum("dur").cast("long").alias("active_time"),
-        )
-        .select(
-            "metric",
-            (F.lit(origin) + F.col("k") * F.lit(interval)).alias("interval_start"),
-            "minimum", "maximum", "sum", "count", "integral", "active_time",
-        )
-    )
+        sum_expr = F.sum(F.when(cnt == 1, v).otherwise(0.0))
+        integral = F.sum(v * dur)
+    return [F.min(v).alias("minimum"), F.max(v).alias("maximum"),
+            sum_expr.alias("sum"), F.sum(cnt).cast("long").alias("count"),
+            integral.alias("integral"),
+            F.sum(dur).cast("long").alias("active_time")]
+
+
+def _merge_pieces(pieces: DataFrame, interval: int, origin: int = 0,
+                  exact: bool = False) -> DataFrame:
+    """groupBy (metric, bucket) with :func:`_piece_aggs` — Spark's
+    partial+final hash aggregation IS ``Aggregate::operator+=``
+    (/root/reference/src/aggregate.cpp:50-59)."""
+    return (pieces.groupBy("metric", "k").agg(*_piece_aggs(exact))
+            .select("metric", (F.lit(origin) + F.col("k") * F.lit(interval))
+                    .alias("interval_start"), *_FIELDS))
 
 
 def _level1(raw: DataFrame, interval: int, ranges: DataFrame,
@@ -365,7 +362,7 @@ def build_level1(raw: DataFrame, interval: int,
     :func:`plan_build` decides the salt: the per-metric window is salted
     via :func:`lagged_salted` only when a metric's series would overfill
     one window task.
-    ``exact``: decimal sum/integral accumulation (see :func:`_merge_pieces`);
+    ``exact``: decimal sum/integral accumulation (see :func:`_piece_aggs`);
     higher levels inherit the decimal type through their plain ``sum()``s.
     """
     chunks, ranges = plan_build(raw)

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..chrono import SECOND
-from ..compat import pin, release
+from ..compat import default_parallelism, pin, release
 from ..meta import Meta
 from .rollup import build_levels, chunk_index
 
@@ -415,8 +415,7 @@ def throttle_auto(raw: DataFrame, cooldown_ns: int,
         # runs as a single-partition window (the arm's measured dominant
         # cost at 8M rows).  Default the salt to the cluster width; the
         # salted suffix-min is equivalence-tested against the plain one.
-        pk["salt_chunks"] = max(
-            2, raw.sparkSession.sparkContext.defaultParallelism)
+        pk["salt_chunks"] = max(2, default_parallelism(raw.sparkSession))
     return throttle_parallel(raw, cooldown_ns, **pk)
 
 

@@ -1,8 +1,9 @@
 """aggregate_auto (VERDICT r5 item 6): the cost-based exact-vs-telescope
 dispatch must (a) return results identical to BOTH underlying paths on
 either side of its own crossover, (b) choose exact for small windowed-row
-estimates and telescope for large ones, and (c) plan from the rollups
-only — the raw store is never scanned to make the choice.
+estimates and telescope for large ones, (c) plan from the rollups
+only — the raw store is never scanned to make the choice, and (d) run a
+pinned number of Spark jobs per read op.
 """
 
 from __future__ import annotations
@@ -13,10 +14,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from hta_spark import Meta, SECOND
+from hta_spark.compat import lc_available
 from hta_spark.operators import (aggregate_auto, aggregate_exact,
                                  aggregate_telescope, build_levels)
 from hta_spark.operators.aggregate import _auto_choice
 from hta_spark.operators.rollup import raw_range
+from hta_spark.operators.stats import count_via_levels
+
+from .conftest import jobs_in
 
 
 @pytest.fixture(scope="module")
@@ -156,33 +161,22 @@ def test_auto_plans_from_rollups_not_raw(store, monkeypatch):
     assert len(orig(calls[1])) <= 4
 
 
-def test_planner_stats_cached_zero_actions(store, monkeypatch):
-    """VERDICT r6 'What's wrong #2': repeat dispatches against the same
-    materialized store version must plan with ZERO Spark actions — the
-    ranges bounds and the coarse histogram are static per store version
-    and cached on the (coarsest level, ranges) frame identities.  A new
-    ranges object (new store version) re-collects."""
+def test_read_ops_job_counts(spark, store):
+    """Spark jobs per read op on the store fixture, pinned so that a
+    refactor of the shared kernels cannot silently add passes: the
+    planner's ranges pin and two collects, the exact arm's pruned scan,
+    the telescope's pinned bounds and per-level branches, and the count
+    walk's pinned ranges."""
     pts, levels, meta = store
-    ranges = raw_range(pts).localCheckpoint(eager=True)
-    b, e = 10_000 * SECOND, 13_000 * SECOND
-    first = _auto_choice(levels, meta, b, e, ranges, 512_000, 8)  # warm
+    lc_available(spark)              # the once-per-session capability probe
+    b, e = 10_005 * SECOND, 12_995 * SECOND
 
-    calls = []
-    orig = type(pts).collect
+    def n_jobs(build):
+        return len(jobs_in(spark, lambda: build().collect())[1])
 
-    def spy(self, *a, **k):
-        calls.append(self)
-        return orig(self, *a, **k)
-    monkeypatch.setattr(type(pts), "collect", spy)
-    # same store version: repeat of the same range AND a different range
-    # both plan driver-side from the cached stats
-    again = _auto_choice(levels, meta, b, e, ranges, 512_000, 8)
-    other = _auto_choice(levels, meta, 10_000 * SECOND, 10_040 * SECOND,
-                         ranges, 1, 8)
-    assert calls == []
-    assert again == first
-    assert other[0] == "exact"
-    # a NEW ranges frame (the shape of a new store version) re-plans
-    ranges2 = raw_range(pts).localCheckpoint(eager=True)
-    _auto_choice(levels, meta, b, e, ranges2, 512_000, 8)
-    assert len(calls) == 2
+    assert n_jobs(lambda: aggregate_auto(pts, levels, meta, b, e)) == 13
+    assert n_jobs(lambda: aggregate_auto(pts, levels, meta, b, e,
+                                         row_floor=1, row_ratio=0)) == 22
+    assert n_jobs(lambda: aggregate_telescope(pts, levels, meta, b, e)) == 17
+    assert n_jobs(lambda: aggregate_exact(pts, b, e)) == 10
+    assert n_jobs(lambda: count_via_levels(pts, levels, meta, b, e)) == 15

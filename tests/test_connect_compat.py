@@ -3,8 +3,9 @@
 The library must not hard-depend on classic-only driver handles.  These
 tests prove the ``hta_spark.compat`` fallbacks are load-bearing, not dead
 code: with ``DataFrame.localCheckpoint`` monkeypatched to RAISE (the
-failure a restricted Connect server produces) and ``compat.FORCE_FALLBACK``
-on (disabling the ``sc.broadcast`` / ``defaultParallelism`` / classic-pin
+failure a restricted Connect server produces), ``spark.sparkContext``
+raising when library code reads it, and ``compat.FORCE_FALLBACK`` on
+(disabling the ``sc.broadcast`` / ``defaultParallelism`` / classic-pin
 paths too), a battery of operators that previously called those handles
 directly must produce results identical to the unpatched run.
 
@@ -16,6 +17,8 @@ manifest layer under Connect by construction.
 """
 
 from __future__ import annotations
+
+import sys
 
 import pandas as pd
 import pytest
@@ -31,9 +34,20 @@ from .conftest import F1_META, tp
 
 @pytest.fixture()
 def connect_sim(spark, monkeypatch):
-    """Simulate a Connect client: classic paths off, localCheckpoint raises."""
+    """Simulate a Connect client: classic paths off, localCheckpoint
+    raises, and library code reading ``spark.sparkContext`` raises.
+    PySpark's own classic internals (UDF registration) still reach the
+    context."""
     def _boom(self, eager=True):
         raise RuntimeError("localCheckpoint is not supported on this server")
+
+    def _no_context(self):
+        if sys._getframe(1).f_globals.get("__name__", "").startswith(
+                "hta_spark"):
+            raise RuntimeError("sparkContext is not supported on Connect")
+        return self._sc
+
+    monkeypatch.setattr(type(spark), "sparkContext", property(_no_context))
 
     # patch the CONCRETE class (pyspark 4.x: pyspark.sql.DataFrame is an
     # abstract base; sessions build pyspark.sql.classic.dataframe.DataFrame)
@@ -77,8 +91,12 @@ def test_throttle_arms_under_connect(spark, f1_raw, connect_sim):
     seq = _pdf(throttle(f1_raw, cooldown))
     par = _pdf(throttle_parallel(f1_raw, cooldown))
     auto = _pdf(throttle_auto(f1_raw, cooldown))
+    # seq_rows_cap=0 forces the parallel arm, whose default salt reads
+    # the cluster width
+    auto_par = _pdf(throttle_auto(f1_raw, cooldown, seq_rows_cap=0))
     pd.testing.assert_frame_equal(seq, par)
     pd.testing.assert_frame_equal(seq, auto)
+    pd.testing.assert_frame_equal(seq, auto_par)
 
 
 def test_retrieve_flex_raw_smooth_under_connect(spark, f1_raw, connect_sim):
